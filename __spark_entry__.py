@@ -113,11 +113,11 @@ _FORCE_WINDOW: dict[str, int] = {
     "nation_trade_pagerank": 15,
     # corpus shared-gram aggregate: count(DISTINCT doc_id)>=2 replaced
     # by min(doc_id)!=max(doc_id) — one exchange instead of two (r15).
-    # Re-forced r16: ONE g-keyed exchange shared by corpus agg + join
-    # probe (repartition + ReusedExchange replaces the localCheckpoint
-    # pin); corpus side filtered to shared grams, join LEFT (inner
-    # equals left because every instance gram is in corpus by
-    # construction).  Values re-proven at both SFs + hostile seeds.
+    # Re-forced r16: join-free shape — the exploded instances shuffle
+    # by gram once and a window min(doc_id)/max(doc_id) over each gram
+    # group marks shared grams, replacing the localCheckpoint pin, the
+    # corpus aggregate and the join back (census: 1 scan, 0 joins, 1
+    # window exec).  Values re-proven at both SFs + hostile seeds.
     "doc_duplicate_ngram_rate": 16,
     # distinct-then-aggregate fused into one collect_set aggregate —
     # one exchange instead of two.

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"""Benchmark harness: runs the headline queries (or the catalog queries
+named on the command line) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ..., "calibration": {...}}.
 
 Each query is executed to completion (count() action) after a warm-up of
@@ -18,6 +19,8 @@ window was steady and the query timings are trustworthy; a spread above
 ~1.5 proves the window was noisy and the wall-clock numbers must be
 discounted accordingly — the artifact carries its own evidence either
 way.
+
+Usage: python bench.py [NAMES...]
 """
 
 from __future__ import annotations
@@ -263,6 +266,57 @@ def steady_single(
     return best_payload, calibration
 
 
+def time_catalog(
+    spark, sf_dir: str, names, n_rounds: int = N_ROUNDS, before=None
+) -> tuple[dict[str, float], dict]:
+    """Time a full ``count()`` of each named catalog query at ``sf_dir``
+    under the steady policy (``steady_time_queries``) after one warm-up
+    action, with ``before(name)`` (if given) run ahead of each attempt
+    but outside its timing.  The calibration block also records the
+    session's ``master`` / ``default_parallelism`` /
+    ``shuffle_partitions`` and ``$SPARK_GRAFT_CPUS``, so an artifact
+    shows which parallelism produced it."""
+    from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
+
+    # Warm up the JVM + parquet footer caches with a trivial action.
+    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
+
+    def _attempt(name: str) -> float:
+        if before is not None:
+            before(name)
+        t0 = time.perf_counter()
+        CATALOG[name].fn(spark, sf_dir).count()
+        return time.perf_counter() - t0
+
+    timings, calibration = steady_time_queries(list(names), _attempt, n_rounds=n_rounds)
+    sc = spark.sparkContext
+    calibration["master"] = sc.master
+    calibration["default_parallelism"] = sc.defaultParallelism
+    calibration["shuffle_partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
+    calibration["cpus_env"] = os.environ.get("SPARK_GRAFT_CPUS")
+    return timings, calibration
+
+
+def run_child(argv: list[str], env: dict | None = None) -> dict:
+    """Run ``python *argv RESULT_PATH`` and return the JSON object the
+    child wrote to ``RESULT_PATH`` (its last argument).  The result
+    travels through a file, so nothing the child or Spark prints on
+    stdout can be mistaken for it."""
+    import subprocess
+    import tempfile
+
+    fd, path = tempfile.mkstemp(prefix="bench_child_", suffix=".json")
+    os.close(fd)
+    try:
+        subprocess.run(
+            [sys.executable, *argv, path], env=env, check=True, capture_output=True
+        )
+        with open(path) as fh:
+            return json.load(fh)
+    finally:
+        os.unlink(path)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
@@ -271,41 +325,11 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench_queries = {n: q for n, q in CATALOG.items() if q.bench}
-    # Warm up the JVM + parquet footer caches with a trivial action.
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
-
-    # Best-of-N per query, emitted from the fast-steady probe window:
-    # the harness VM shows intermittent CPU-steal stalls (observed
-    # 50-160s, occasionally minutes), so attempts are INTERLEAVED
-    # round-robin and calibration probes bracket every round.  The
-    # emitted number per query is its fastest attempt among rounds whose
-    # bracketing probes sit within STEADY_SPREAD of the fastest probe
-    # observed (steady_selection); while no such window covers every
-    # query, bounded extra rounds retry on a hopefully quieter host
-    # (r12 verdict task 2: per-query ratios must never again ship under
-    # a 4.8x probe spread).
-    def _attempt(name: str) -> float:
-        t0 = time.perf_counter()
-        bench_queries[name].fn(spark, sf_dir).count()
-        return time.perf_counter() - t0
-
-    timings, calibration = steady_time_queries(list(bench_queries), _attempt)
-
-    # Self-proving parallelism evidence (r15 verdict task 1): the
-    # artifact itself must show the session honored $SPARK_GRAFT_CPUS —
-    # at sf0.1 the 8-vs-32-core wall ratios are ≈1 for the legitimate
-    # reason that per-query time is planning/scheduler-bound, which is
-    # indistinguishable from an ignored knob unless the master and the
-    # effective parallelism are IN the JSON.  Additions-only: the
-    # timing loop and every existing field are untouched.  The
-    # compute-bound core-ratio evidence lives in the 10x-replicated
-    # comparison (tools_r16_core_scaling.py → docs/CORE_SCALING_r16).
-    sc = spark.sparkContext
-    calibration["master"] = sc.master
-    calibration["default_parallelism"] = sc.defaultParallelism
-    calibration["shuffle_partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
-    calibration["cpus_env"] = os.environ.get("SPARK_GRAFT_CPUS")
+    # Interleaved best-of-N per query, emitted from the fast-steady
+    # probe window (see steady_selection): the host shows intermittent
+    # CPU-steal stalls, so calibration probes bracket every round.
+    names = sys.argv[1:] or [n for n, q in CATALOG.items() if q.bench]
+    timings, calibration = time_catalog(spark, sf_dir, names)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -34,38 +34,29 @@ QUERIES = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from bench import steady_time_queries
+    from bench import time_catalog
     from unicargo_medallion_data_pipeline_spark.pipelines import canonical
     from unicargo_medallion_data_pipeline_spark.plans import universes
-    from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
     from unicargo_medallion_data_pipeline_spark.session import get_spark
 
     spark = get_spark("bench-canonical")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
 
-    def attempt(n: str) -> float:
-        t0 = time.perf_counter()
-        CATALOG[n].fn(spark, sf_dir).count()
-        return time.perf_counter() - t0
-
-    def attempt_pinned(n: str) -> float:
-        # Every pinned attempt must PAY the derive-and-pin cost this
-        # harness exists to compare (r12 advice): with the session-keyed
-        # cache left warm, every attempt after the first is a cache hit
-        # and min-of-rounds discards the only one that derived.
-        universes.clear_universe_cache()
-        return attempt(n)
-
+    # Every pinned attempt must PAY the derive-and-pin cost this harness
+    # exists to compare (r12 advice): with the session-keyed cache left
+    # warm, every attempt after the first is a cache hit and
+    # min-of-rounds discards the only one that derived.
     os.environ.pop(canonical.CANONICAL_DIR_ENV, None)
-    pinned, cal_p = steady_time_queries(QUERIES, attempt_pinned, n_rounds=3)
+    pinned, cal_p = time_catalog(
+        spark, sf_dir, QUERIES, n_rounds=3, before=lambda n: universes.clear_universe_cache()
+    )
 
     out = tempfile.mkdtemp(prefix="canon_bench_")
     t0 = time.perf_counter()
     canonical.materialize_canonical(spark, sf_dir, out)
     mat_cost = round(time.perf_counter() - t0, 3)
     os.environ[canonical.CANONICAL_DIR_ENV] = out
-    silver, cal_s = steady_time_queries(QUERIES, attempt, n_rounds=3)
+    silver, cal_s = time_catalog(spark, sf_dir, QUERIES, n_rounds=3)
     os.environ.pop(canonical.CANONICAL_DIR_ENV, None)
 
     print(

@@ -8,8 +8,9 @@ scale.  This harness builds the structure-preserving 10x replication
 (bench_scale.build_scaled — the same machinery as the committed
 SCALE10X artifacts), then times a DATA-BOUND query subset under the
 two core counts in INTERLEAVED single-round subprocesses
-(c_high, c_low, c_high, c_low, ...), so a host-noise window hits both
-sides equally instead of poisoning one whole run (this VM's CPU-steal
+(c_high, c_low, c_high, c_low, ...; each one ``bench.time_catalog``
+pass, to which the steady policy may add rounds), so a host-noise
+window hits both sides equally instead of poisoning one whole run (this VM's CPU-steal
 stalls make two back-to-back full runs incomparable — observed 0.65x
 "speedups" on scan-bound queries from exactly that).  Per (query,
 cpus) the reported second is the min over rounds; every round carries
@@ -17,7 +18,9 @@ its own bracketing CPU probes, and every subprocess reports its
 sc.master / sc.defaultParallelism, so the artifact is self-proving:
 the knob is honored, and compute-bound queries show a real core ratio.
 
-Prints ONE JSON line; commit as docs/CORE_SCALING_r16.json.
+Prints ONE JSON line (the committed one is docs/CORE_SCALING_r16.json).
+
+Usage: python bench_cores.py [--replicas 10] [--high N] [--low N] [--rounds 3]
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
@@ -33,6 +35,9 @@ import time
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+import bench  # noqa: E402
+import bench_scale  # noqa: E402
 
 #: Data-bound subset: 10x exponents near 1 in the committed SCALE10X
 #: artifacts (scan/shuffle volume dominates), so core count has real
@@ -75,47 +80,25 @@ def _parallel_floor(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def _child(sf_dir: str) -> None:
-    """One interleaved round: a single attempt per query, probes
-    bracketing the round, environment echoed back."""
-    from bench import _cpu_probe
-    from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
+def _child(sf_dir: str, out_path: str) -> None:
+    """One interleaved round: the parallel floor, then one
+    ``bench.time_catalog`` pass over QUERIES (probes bracketing it,
+    environment echoed in its calibration), written to ``out_path``."""
     from unicargo_medallion_data_pipeline_spark.session import get_spark
 
     spark = get_spark("core-scaling-round")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
-    probes = [_cpu_probe()]
     _parallel_floor(spark)  # warm-up: pay the codegen compile once
-    times: dict[str, float] = {"__parallel_floor__": _parallel_floor(spark)}
-    for name in QUERIES:
-        spark.sparkContext.setJobDescription(f"core-scaling: {name}")
-        t0 = time.perf_counter()
-        CATALOG[name].fn(spark, sf_dir).count()
-        times[name] = round(time.perf_counter() - t0, 3)
-    probes.append(_cpu_probe())
-    sc = spark.sparkContext
-    print(json.dumps({
-        "queries": times,
-        "probes": [round(p, 3) for p in probes],
-        "master": sc.master,
-        "default_parallelism": sc.defaultParallelism,
-        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-    }))
+    floor = _parallel_floor(spark)
+    timings, calibration = bench.time_catalog(spark, sf_dir, QUERIES, n_rounds=1)
+    with open(out_path, "w") as fh:
+        json.dump({"queries": {"__parallel_floor__": floor, **timings},
+                   "calibration": calibration}, fh)
 
 
 def _run_round(cpus: int, sf_dir: str) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    out = subprocess.run(
-        [sys.executable, __file__, "--child", sf_dir],
-        env=env,
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
+    return bench.run_child([__file__, "--child", sf_dir], env)
 
 
 def main() -> None:
@@ -126,24 +109,23 @@ def main() -> None:
     ap.add_argument("--high", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--low", type=int, default=8)
     ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--child", default=None, help=argparse.SUPPRESS)
+    # SF_DIR RESULT_PATH: the child mode bench.run_child drives
+    ap.add_argument("--child", nargs=2, default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
 
     if args.child:
-        _child(args.child)
+        _child(*args.child)
         return
 
-    import bench_scale
     from unicargo_medallion_data_pipeline_spark.session import get_spark
 
-    bench_scale.REPLICAS = args.replicas
     sf01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     work = tempfile.mkdtemp(prefix="core_scaling_")
     try:
         scaled = os.path.join(work, f"sf{args.replicas}x")
         spark = get_spark("core-scaling-build")
         spark.sparkContext.setLogLevel("ERROR")
-        bench_scale.build_scaled(spark, sf01, scaled)
+        bench_scale.build_scaled(spark, sf01, scaled, args.replicas)
         spark.stop()
 
         rounds: dict[str, list[dict]] = {str(args.high): [], str(args.low): []}
@@ -168,10 +150,9 @@ def main() -> None:
         }
         env_rows = {
             str(cpus): {
-                "master": rounds[str(cpus)][0]["master"],
-                "default_parallelism": rounds[str(cpus)][0]["default_parallelism"],
-                "shuffle_partitions": rounds[str(cpus)][0]["shuffle_partitions"],
-                "probes_per_round": [r["probes"] for r in rounds[str(cpus)]],
+                **{k: rounds[str(cpus)][0]["calibration"][k]
+                   for k in ("master", "default_parallelism", "shuffle_partitions")},
+                "probes_per_round": [r["calibration"]["probe_sec"] for r in rounds[str(cpus)]],
             }
             for cpus in (args.high, args.low)
         }

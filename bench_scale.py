@@ -32,6 +32,8 @@ per-replica transforms instead:
 Dup/neighbor density per replica thus matches sf0.1 exactly and total
 density scales linearly, which is what a real 5x corpus does.
 
+Usage: python bench_scale.py [--replicas N] [--headline] [--rounds R] [NAMES...]
+
 Prints ONE JSON line:
   {"metric": "scale_curvature", "queries": {name: {"sf01": s, "sf05": s,
    "ratio": r}}, "calibration": {...}}
@@ -39,17 +41,17 @@ Prints ONE JSON line:
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
 import sys
 import tempfile
-import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+import bench  # noqa: E402
 
 REPLICAS = 5
 
@@ -137,8 +139,8 @@ KEY_SPACE_OF = {
 COPY_AS_IS = ["nation", "region"]
 
 
-def build_scaled_documents(spark, src_dir: str, dst_dir: str) -> None:
-    """documents ×REPLICAS: doc_id offset per replica; replica i>0 maps
+def build_scaled_documents(spark, src_dir: str, dst_dir: str, replicas: int) -> None:
+    """documents ×replicas: doc_id offset per replica; replica i>0 maps
     every whitespace token t → t·r{i}x (injective vocab map: preserves
     every within-replica shingle Jaccard, shares no shingles across
     replicas)."""
@@ -148,7 +150,7 @@ def build_scaled_documents(spark, src_dir: str, dst_dir: str) -> None:
 
     df = load_table(spark, src_dir, "documents")
     max_id = int(df.agg(F.max("doc_id")).collect()[0][0]) + 1
-    rep = df.crossJoin(spark.range(REPLICAS).withColumnRenamed("id", "_r"))
+    rep = df.crossJoin(spark.range(replicas).withColumnRenamed("id", "_r"))
     suffixed = F.expr(
         "array_join(transform(split(text, ' '), t -> concat(t, 'r', _r, 'x')), ' ')"
     )
@@ -162,8 +164,8 @@ def build_scaled_documents(spark, src_dir: str, dst_dir: str) -> None:
     )
 
 
-def build_scaled_embeddings(spark, src_dir: str, dst_dir: str) -> None:
-    """embeddings ×REPLICAS: vec_id offset per replica; replica i>0
+def build_scaled_embeddings(spark, src_dir: str, dst_dir: str, replicas: int) -> None:
+    """embeddings ×replicas: vec_id offset per replica; replica i>0
     multiplies each dimension by a deterministic ±1 (orthogonal —
     within-replica cosines exact, cross-replica pairs scatter)."""
     from pyspark.sql import functions as F
@@ -172,7 +174,7 @@ def build_scaled_embeddings(spark, src_dir: str, dst_dir: str) -> None:
 
     df = load_table(spark, src_dir, "embeddings")
     max_id = int(df.agg(F.max("vec_id")).collect()[0][0]) + 1
-    rep = df.crossJoin(spark.range(REPLICAS).withColumnRenamed("id", "_r"))
+    rep = df.crossJoin(spark.range(replicas).withColumnRenamed("id", "_r"))
     flipped = F.expr(
         "transform(embedding, (x, i) -> CAST(x * (1 - 2 * pmod(hash(i, _r), 2)) AS FLOAT))"
     )
@@ -188,7 +190,7 @@ def build_scaled_embeddings(spark, src_dir: str, dst_dir: str) -> None:
     )
 
 
-def build_scaled(spark, src_dir: str, dst_dir: str) -> None:
+def build_scaled(spark, src_dir: str, dst_dir: str, replicas: int = REPLICAS) -> None:
     from pyspark.sql import functions as F
 
     from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
@@ -201,9 +203,7 @@ def build_scaled(spark, src_dir: str, dst_dir: str) -> None:
 
     for tbl, keys in KEY_COLS.items():
         df = load_table(spark, src_dir, tbl)
-        rep = df.crossJoin(
-            spark.range(REPLICAS).withColumnRenamed("id", "_r")
-        )
+        rep = df.crossJoin(spark.range(replicas).withColumnRenamed("id", "_r"))
         for k in keys:
             rep = rep.withColumn(
                 k, F.col(k) + F.col("_r") * F.lit(spaces[KEY_SPACE_OF[k]])
@@ -213,28 +213,13 @@ def build_scaled(spark, src_dir: str, dst_dir: str) -> None:
             .write.mode("overwrite")
             .parquet(os.path.join(dst_dir, f"{tbl}.parquet"))
         )
-    build_scaled_documents(spark, src_dir, dst_dir)
-    build_scaled_embeddings(spark, src_dir, dst_dir)
+    build_scaled_documents(spark, src_dir, dst_dir, replicas)
+    build_scaled_embeddings(spark, src_dir, dst_dir, replicas)
     for tbl in COPY_AS_IS:
         shutil.copy(
             os.path.join(src_dir, f"{tbl}.parquet"),
             os.path.join(dst_dir, f"{tbl}.parquet"),
         )
-
-
-def time_queries(spark, catalog, sf_dir: str, rounds: int = 3) -> tuple[dict[str, float], dict]:
-    """Per-query minima + calibration via bench.steady_time_queries —
-    the shared steady-by-construction policy, so this harness can no
-    longer commit a scale table whose probe spread breached the bar
-    (r11 verdict item 6)."""
-    from bench import steady_time_queries
-
-    def _attempt(n: str) -> float:
-        t0 = time.perf_counter()
-        catalog[n].fn(spark, sf_dir).count()
-        return time.perf_counter() - t0
-
-    return steady_time_queries(QUERIES, _attempt, n_rounds=rounds)
 
 
 def headline_query_names() -> list[str]:
@@ -264,42 +249,26 @@ def build_scaled_flights_fixture(dst_dir: str, replicas: int) -> None:
     pq.write_table(ff.gen_airports(), os.path.join(dst_dir, "airports.parquet"))
 
 
-def _flight_single(name: str, rounds: int) -> None:
+def _flight_single(name: str, rounds: int, out_path: str) -> None:
     """Subprocess mode: time ONE flight query against whatever fixture
     SPARK_GRAFT_FLIGHTS_FIXTURE_DIR points at (must be set before the
-    plans modules import — which is why this runs in a subprocess)."""
-    from bench import steady_time_queries
-    from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
+    plans modules import — which is why this runs in a subprocess) and
+    write ``{"sec", "calibration"}`` to ``out_path``."""
     from unicargo_medallion_data_pipeline_spark.session import get_spark
 
     spark = get_spark("bench-scale-flight")
     spark.sparkContext.setLogLevel("ERROR")
     sf01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def _attempt(n: str) -> float:
-        t0 = time.perf_counter()
-        CATALOG[n].fn(spark, sf01).count()
-        return time.perf_counter() - t0
-
-    timings, cal = steady_time_queries([name], _attempt, n_rounds=rounds)
-    print(json.dumps({"sec": timings[name], "calibration": cal}))
+    timings, cal = bench.time_catalog(spark, sf01, [name], n_rounds=rounds)
+    with open(out_path, "w") as fh:
+        json.dump({"sec": timings[name], "calibration": cal}, fh)
 
 
 def _time_flight_subprocess(name: str, fixture_dir: str | None, rounds: int) -> dict:
-    import subprocess
-
     env = dict(os.environ)
     if fixture_dir:
         env["SPARK_GRAFT_FLIGHTS_FIXTURE_DIR"] = fixture_dir
-    out = subprocess.run(
-        [sys.executable, __file__, "--flight-single", name, "--rounds", str(rounds)],
-        env=env,
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    return bench.run_child([__file__, "--rounds", str(rounds), "--flight-single", name], env)
 
 
 def main() -> None:
@@ -307,29 +276,32 @@ def main() -> None:
     import math
 
     ap = argparse.ArgumentParser(description="scaling-curvature harness")
+    ap.add_argument("names", nargs="*", help="catalog queries to time (default: QUERIES)")
     ap.add_argument("--replicas", type=int, default=REPLICAS)
     ap.add_argument(
         "--headline",
         action="store_true",
-        help="measure the FULL bench.py headline set (plus fixture-"
-        "scaled flight queries) instead of the curated QUERIES list",
+        help="add the FULL bench.py headline set (plus fixture-scaled "
+        "flight queries) to the timed names",
     )
     ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--flight-single", default=None, help=argparse.SUPPRESS)
+    # NAME RESULT_PATH: the child mode bench.run_child drives
+    ap.add_argument("--flight-single", nargs=2, default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
 
     if args.flight_single:
-        _flight_single(args.flight_single, args.rounds)
+        name, out_path = args.flight_single
+        _flight_single(name, args.rounds, out_path)
         return
 
-    globals()["REPLICAS"] = args.replicas
     sf01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
     from unicargo_medallion_data_pipeline_spark.session import get_spark
 
-    names = sorted(set(QUERIES) | set(headline_query_names())) if args.headline else QUERIES
-    globals()["QUERIES"] = names
+    names = args.names or QUERIES
+    if args.headline:
+        names = sorted(set(names) | set(headline_query_names()))
 
     spark = get_spark("bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -337,10 +309,10 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="scale_bench_")
     try:
         sfr = os.path.join(work, f"sf{args.replicas}x")
-        build_scaled(spark, sf01, sfr)
+        build_scaled(spark, sf01, sfr, args.replicas)
 
-        t01, cal01 = time_queries(spark, CATALOG, sf01, rounds=args.rounds)
-        tr, calr = time_queries(spark, CATALOG, sfr, rounds=args.rounds)
+        t01, cal01 = bench.time_catalog(spark, sf01, names, n_rounds=args.rounds)
+        tr, calr = bench.time_catalog(spark, sfr, names, n_rounds=args.rounds)
 
         def _entry(base: float, scaled: float) -> dict:
             ratio = round(scaled / base, 2) if base else None

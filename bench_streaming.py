@@ -2,11 +2,12 @@
 """Streaming throughput anchors (r7 verdict task 6; scenarios extended
 round 10 per r9 verdict task 7).
 
-``bench.py`` anchors batch query latency and ``bench_medallion.py`` the
-batch pipeline envelope; this anchors STREAMING throughput: an
-``availableNow`` incremental-batch run over the sf0.1 events table
-through the engine's three most scale-exposed streaming paths, with
-per-micro-batch rate/latency captured by ``streaming/observe.py``:
+``bench.py`` anchors batch query latency and ``perfbench/run.py
+--workload medallion_batch`` the batch pipeline envelope; this anchors
+STREAMING throughput: an ``availableNow`` incremental-batch run over
+the sf0.1 events table through the engine's three most scale-exposed
+streaming paths, with per-micro-batch rate/latency captured by
+``streaming/observe.py``:
 
 * ``tumbling`` — watermarked tumbling-window aggregation
   (``streaming/windows.tumbling_window_agg``, batch-mirrored by the

@@ -368,3 +368,52 @@ def test_latest_per_key_surfaces_null_ts_as_survivor(spark):
     # the rewrite the ordering trick preserves: top-1-per-key pushdown
     plan = deduped._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
+
+
+def test_gate_fallback_warns_once_and_keeps_result(spark, monkeypatch, caplog):
+    """When the Observation accessor ``_read_gate`` polls fails, the
+    gate degrades to a direct aggregate job: one warning per Spark
+    application, and the dimension ends up exactly as on the fast path."""
+    import logging
+
+    from pyspark.sql import Observation
+
+    from unicargo_medallion_data_pipeline_spark.operators import scd2
+
+    batches = [
+        [(1, "AirOne", "US", 1), (2, "BlueJet", "DE", 1)],
+        [(1, "AirOne Intl", "US", 5), (3, "SkyHop", "FR", 5)],
+        [(2, "BlueJet Air", "DE", 7), (3, "SkyHop", "FR", 7)],
+    ]
+    fast = os.path.join(tempfile.mkdtemp(prefix="scd2_fast_"), "dim")
+    for rows in batches:
+        _apply(spark, fast, rows)
+
+    class _FailingAccessor:
+        def __init__(self, jo):
+            self._inner = jo
+
+        def getRowOrEmpty(self):
+            raise RuntimeError("accessor removed")
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    real_on = Observation._on
+
+    def _on(self, df, *exprs):
+        out = real_on(self, df, *exprs)
+        self._jo = _FailingAccessor(self._jo)
+        return out
+
+    monkeypatch.setattr(Observation, "_on", _on)
+    monkeypatch.setattr(scd2, "_GATE_FALLBACK_WARNED", set())
+    slow = os.path.join(tempfile.mkdtemp(prefix="scd2_slow_"), "dim")
+    with caplog.at_level(logging.WARNING, logger=scd2.__name__):
+        for rows in batches:
+            _apply(spark, slow, rows)
+
+    warnings = [r for r in caplog.records if "gate falls back" in r.getMessage()]
+    assert len(warnings) == 1, caplog.records  # two incremental applies, one warning
+    assert "accessor removed" in warnings[0].getMessage()
+    assert _state(spark, slow) == _state(spark, fast)

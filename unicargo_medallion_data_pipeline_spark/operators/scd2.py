@@ -34,11 +34,17 @@ when the dependency lands.
 
 from __future__ import annotations
 
+import logging
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+log = logging.getLogger(__name__)
+
+#: Spark applications that already logged the gate-fallback warning.
+_GATE_FALLBACK_WARNED: set[str] = set()
 
 #: SCD2 bookkeeping columns added to the caller's schema.
 SCD2_COLS = ("effective_from", "effective_to", "is_current", "scd_state")
@@ -186,24 +192,35 @@ def _read_gate(obs, joined: DataFrame, gate_aggs: list, timeout_sec: float = 60.
     action would hang every incremental apply instead of failing loud).
     Polls the non-blocking JVM accessor — on a healthy version the
     first poll already sees the metrics, because the eager checkpoint
-    action has completed — and past the deadline degrades to ONE direct
-    aggregate job over the checkpointed join (the pre-r15 extra-job
-    shape), never a hang."""
+    action has completed — and past the deadline, or when the accessor
+    is missing or fails, degrades to ONE direct aggregate job over the
+    checkpointed join (the pre-r15 extra-job shape), never a hang.  The
+    degrade logs one warning per Spark application, so the extra job
+    per apply is visible."""
     import time as _time
 
     jo = getattr(obs, "_jo", None)
     deadline = _time.monotonic() + timeout_sec
+    reason = "Observation has no JVM accessor"
     while jo is not None:
         try:
             delivered = not jo.getRowOrEmpty().isEmpty()
-        except Exception:  # pragma: no cover — accessor shape changed
+        except Exception as e:
+            reason = f"Observation accessor failed: {e!r}"
             break
         if delivered:
             return obs.get
         if _time.monotonic() >= deadline:  # pragma: no cover — listener regression
+            reason = f"observed metrics not delivered within {timeout_sec}s"
             break
         _time.sleep(0.05)
-    return joined.agg(*gate_aggs).collect()[0].asDict()  # pragma: no cover
+    app = joined.sparkSession.sparkContext.applicationId
+    if app not in _GATE_FALLBACK_WARNED:
+        _GATE_FALLBACK_WARNED.add(app)
+        log.warning(
+            "SCD2 gate falls back to an extra aggregate job per apply (%s)", reason
+        )
+    return joined.agg(*gate_aggs).collect()[0].asDict()
 
 
 def scd2_frame_like(

@@ -175,7 +175,8 @@ def run_medallion(
     """Full bronze→silver→gold run.  Returns the table names written per
     layer plus quality-gate profiles.  Pass a dict as ``timings`` to
     record per-layer wall seconds into it (keys ``bronze``/``silver``/
-    ``gold`` — the measurement hook ``bench_medallion.py`` uses).
+    ``gold`` — the measurement hook ``perfbench/run.py --workload
+    medallion_batch`` uses).
 
     ``gold_parallelism`` > 1 submits that many independent gold tables
     concurrently from driver threads — the supported Spark pattern for

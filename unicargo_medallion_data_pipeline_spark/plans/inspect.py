@@ -118,3 +118,33 @@ def collect_with_codegen_spans(df: DataFrame) -> tuple[list, int]:
     rows = df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     return rows, codegen_spans_from_text(plan)
+
+
+def main(argv=None) -> None:
+    """``python -m unicargo_medallion_data_pipeline_spark.plans.inspect
+    OUT_DIR before|after [NAMES...]``: write the formatted plan of every
+    bench catalog query (or only NAMES) at $SPARK_GRAFT_SF_DIR to
+    ``OUT_DIR/<name>_<suffix>.txt``, for before/after plan diffs."""
+    import os
+    import sys
+
+    from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
+    from unicargo_medallion_data_pipeline_spark.session import get_spark
+
+    out_dir, suffix, *only = sys.argv[1:] if argv is None else argv
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("plan-dump")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in only or [n for n, q in CATALOG.items() if q.bench]:
+        try:
+            plan = plan_text(CATALOG[name].fn(spark, sf_dir))
+        except Exception as e:  # noqa: BLE001 — the dump records it
+            plan = f"ERROR building plan: {e}"
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
+            fh.write(plan)
+        print(name, "->", f"{name}_{suffix}.txt")
+
+
+if __name__ == "__main__":
+    main()
