@@ -125,6 +125,11 @@ _FORCE_WINDOW: dict[str, int] = {
     # single-scan form: shared user_id exchange feeds dedup aggregate +
     # cohort window; the first-touch/activity join is gone.
     "user_weekly_retention": 15,
+    # r17: build_dim_date generates its rows from a Range scan and date
+    # functions instead of a driver-side row list (no RDD scan, no
+    # Python worker); rows, names and types unchanged, result hash
+    # unchanged.  Values re-proven at both SFs + hostile seeds.
+    "generated_dim_date": 17,
 }
 
 #: Driver sample-window size (the correctness harness samples this many

@@ -194,40 +194,45 @@ def test_fact_rerun_is_deterministic(spark, flight_fixture_dir, medallion):
 def test_gold_parallelism_matches_serial(spark, medallion, flight_fixture_dir, test_env_config):
     """gold_parallelism>1 must produce bitwise-identical gold tables to
     the serial path (distinct targets, shared read-only cached fact) —
-    the correctness contract behind the bench's concurrent fan-out."""
+    the correctness contract behind the bench's concurrent fan-out.
+    Width 2 is fewer workers than the two shared-frame pins plus the
+    tables, so it also proves a consumer waiting on its pin cannot
+    starve the pool."""
     from unicargo_medallion_data_pipeline_spark.pipelines.medallion import run_medallion
 
-    par = run_medallion(
-        spark,
-        {
-            "flights": os.path.join(flight_fixture_dir, "flights.csv"),
-            "airlines": os.path.join(flight_fixture_dir, "airlines.csv"),
-            "airports": os.path.join(flight_fixture_dir, "airports.csv"),
-        },
-        environment="testpar",
-        config={
-            "environments": {
-                "testpar": test_env_config["environments"]["test"],
-                **{
-                    k: v
-                    for k, v in test_env_config["environments"].items()
-                    if k != "test"
-                },
+    for width in (4, 2):
+        env = f"testpar{width}"
+        par = run_medallion(
+            spark,
+            {
+                "flights": os.path.join(flight_fixture_dir, "flights.csv"),
+                "airlines": os.path.join(flight_fixture_dir, "airlines.csv"),
+                "airports": os.path.join(flight_fixture_dir, "airports.csv"),
             },
-            "tables": test_env_config["tables"],
-        },
-        date_range=("2015-01-01", "2015-12-31"),
-        gold_parallelism=4,
-    )
-    assert set(par.gold) == set(medallion.gold)
-    for name in par.gold:
-        a = spark.read.table(medallion.gold[name])
-        b = spark.read.table(par.gold[name])
-        assert a.schema == b.schema, name
-        assert (
-            a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-        ), f"gold table {name} differs between serial and parallel"
-        assert a.count() == b.count(), name
+            environment=env,
+            config={
+                "environments": {
+                    env: test_env_config["environments"]["test"],
+                    **{
+                        k: v
+                        for k, v in test_env_config["environments"].items()
+                        if k != "test"
+                    },
+                },
+                "tables": test_env_config["tables"],
+            },
+            date_range=("2015-01-01", "2015-12-31"),
+            gold_parallelism=width,
+        )
+        assert set(par.gold) == set(medallion.gold)
+        for name in par.gold:
+            a = spark.read.table(medallion.gold[name])
+            b = spark.read.table(par.gold[name])
+            assert a.schema == b.schema, (width, name)
+            assert (
+                a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+            ), f"gold table {name} differs between serial and width {width}"
+            assert a.count() == b.count(), (width, name)
 
 
 def test_quarantine_gate_failure_preserves_previous_bronze(spark, monkeypatch):
@@ -260,8 +265,8 @@ def test_quarantine_gate_failure_preserves_previous_bronze(spark, monkeypatch):
     # second run: simulate a LOSSY split (one good row silently dropped)
     real = med.read_csv_with_quarantine
 
-    def lossy(spark_, path_, schema_):
-        good, bad = real(spark_, path_, schema_)
+    def lossy(spark_, path_, schema_, **kw):
+        good, bad = real(spark_, path_, schema_, **kw)
         return good.limit(1), bad
 
     monkeypatch.setattr(med, "read_csv_with_quarantine", lossy)
@@ -441,3 +446,178 @@ def test_datagen_nonfinite_injection_and_scrub_roundtrip(spark, tmp_path):
     assert all(v is None or math.isfinite(v) for v in vals)
     # conservation: scrub nulls cells, never drops rows
     assert scrubbed.count() == ev.count()
+
+
+def _old_dim_date_rows(start, end):
+    """Pure-Python copy of the driver-side row builder build_dim_date
+    replaced, the reference for the Range-based form."""
+    import datetime as dt
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.silver import _DAY_NAMES, _MONTH_NAMES
+
+    rows, d, sk = [], dt.date.fromisoformat(start), 1
+    while d <= dt.date.fromisoformat(end):
+        dow = d.isoweekday()
+        rows.append((
+            sk, d, d.year, d.month, d.day, dow, _DAY_NAMES[dow - 1],
+            _MONTH_NAMES[d.month - 1], (d.month - 1) // 3 + 1, 1 if dow >= 6 else 0,
+        ))
+        d += dt.timedelta(days=1)
+        sk += 1
+    return rows
+
+
+def test_build_dim_date_equals_driver_side_rows(spark):
+    """build_dim_date (spark.range + date functions) must equal the old
+    driver-side rows bitwise, schema included, and plan no RDD scan."""
+    from unicargo_medallion_data_pipeline_spark.pipelines.silver import (
+        DIM_DATE_SCHEMA,
+        build_dim_date,
+    )
+    from unicargo_medallion_data_pipeline_spark.plans.inspect import executed_plan_text
+
+    cases = [
+        ("2015-01-01", "2030-12-31", 5844),
+        ("2016-02-28", "2016-03-01", 3),  # leap day
+        ("2016-02-29", "2016-02-29", 1),
+        ("2016-03-01", "2016-02-28", 0),  # end < start
+    ]
+    for start, end, n in cases:
+        got = build_dim_date(spark, start, end)
+        want = spark.createDataFrame(_old_dim_date_rows(start, end), DIM_DATE_SCHEMA)
+        assert got.schema == want.schema, (start, end)
+        assert got.exceptAll(want).count() == 0, (start, end)
+        assert want.exceptAll(got).count() == 0, (start, end)
+        assert got.count() == n, (start, end)
+        assert "ExistingRDD" not in executed_plan_text(got), (start, end)
+
+
+def _three_entity_csvs(flight_fixture_dir, d):
+    """Flight fixture flights + airports, and an airlines file with one
+    wrong-column-count line, so its quarantine table is non-empty."""
+    airlines = os.path.join(d, "airlines.csv")
+    with open(airlines, "w") as f:
+        f.write("iata_code,airline\n")
+        f.write("AA,American Airlines\n")
+        f.write("DL,Delta Air Lines\n")
+        f.write("XX,Broken Line,unexpected,extra,columns\n")
+    return {
+        "flights": os.path.join(flight_fixture_dir, "flights.csv"),
+        "airlines": airlines,
+        "airports": os.path.join(flight_fixture_dir, "airports.csv"),
+    }
+
+
+def _bronze_cfg(env, root):
+    return {
+        "environments": {env: {"storage_root": root}},
+        "tables": {
+            e: {"bronze": {"table": f"{e}_raw", "source_format": "csv"}}
+            for e in ("flights", "airlines", "airports")
+        },
+    }
+
+
+def test_bronze_job_budget_without_fragments(spark, flight_fixture_dir):
+    """With no odd-quote-parity line in any input, bronze runs the census,
+    the parse pin and the two staged writes per entity, and no quote
+    audit: at most 5 Spark jobs per entity, counted by job id from the
+    status store (host-independent)."""
+    import tempfile
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.medallion import run_bronze
+    from unicargo_medallion_data_pipeline_spark.sources.readers import csv_line_census
+
+    paths = _three_entity_csvs(flight_fixture_dir, tempfile.mkdtemp(prefix="budget_"))
+    assert all(csv_line_census(spark, p)[1] == 0 for p in paths.values())
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    cfg = _bronze_cfg("budget", tempfile.mkdtemp(prefix="budgetwh_"))
+    before = last_job_id()
+    run_bronze(spark, paths, environment="budget", config=cfg)
+    n_jobs = last_job_id() - before
+    assert 0 < n_jobs <= 5 * len(paths), n_jobs
+
+
+def test_concurrent_bronze_failure_is_isolated(spark, monkeypatch, flight_fixture_dir):
+    """One lossy entity among three ingesting concurrently: run_bronze
+    raises, that entity's previous bronze and quarantine tables are
+    untouched, and no __staging or __prev table is left behind."""
+    import tempfile
+
+    from unicargo_medallion_data_pipeline_spark.pipelines import medallion as med
+
+    paths = _three_entity_csvs(flight_fixture_dir, tempfile.mkdtemp(prefix="isolate_"))
+    cfg = _bronze_cfg("isolate", tempfile.mkdtemp(prefix="isolatewh_"))
+    med.run_bronze(spark, paths, environment="isolate", config=cfg)
+    assert spark.read.table("isolate_bronze.airlines_raw").count() == 2
+    assert spark.read.table("isolate_bronze.airlines_raw_quarantine").count() == 1
+
+    real = med.read_csv_with_quarantine
+
+    def lossy(spark_, path_, schema_, **kw):
+        good, bad = real(spark_, path_, schema_, **kw)
+        return (good.limit(1), bad) if path_ == paths["airlines"] else (good, bad)
+
+    monkeypatch.setattr(med, "read_csv_with_quarantine", lossy)
+    with pytest.raises(ValueError, match="airlines: quarantine split lost rows"):
+        med.run_bronze(spark, paths, environment="isolate", config=cfg)
+    assert spark.read.table("isolate_bronze.airlines_raw").count() == 2
+    assert spark.read.table("isolate_bronze.airlines_raw_quarantine").count() == 1
+    left = [
+        t.name
+        for t in spark.catalog.listTables("isolate_bronze")
+        if "__staging" in t.name or "__prev" in t.name
+    ]
+    assert left == []
+
+
+def test_fan_out_pins_run_once_and_failures_cancel_pending():
+    """_once runs its function exactly once however many pool workers
+    (more than cores, with a shortened switch interval) wait on it, and
+    every waiter sees it finished; a failing _fan_out call re-raises and
+    cancels the calls not yet started."""
+    import sys
+    import time
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.medallion import _fan_out, _once
+
+    calls = []
+
+    def slow_pin():
+        time.sleep(0.05)
+        calls.append(1)
+
+    pin = _once(slow_pin)
+
+    def consumer(_):
+        pin()
+        return len(calls)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        seen = _fan_out(consumer, range(64), 16)
+    finally:
+        sys.setswitchinterval(old)
+    assert calls == [1]
+    assert seen == [1] * 64
+
+    started = []
+
+    def fail_first(i):
+        started.append(i)
+        if i == 0:
+            raise ValueError("boom")
+        time.sleep(0.2)
+
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="boom"):
+        _fan_out(fail_first, range(20), 2)
+    assert len(started) < 20
+    assert time.perf_counter() - t0 < 5

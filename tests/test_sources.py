@@ -502,6 +502,60 @@ def test_quote_audit_reroute_pairs_with_subtraction(spark, tmp_path):
     assert good.count() + bad.count() == len(data_lines)
 
 
+def test_csv_line_census_matches_two_pass_counts(spark, tmp_path):
+    """csv_line_census folds the bronze conservation census and the
+    quote-parity count into one text scan; both numbers must equal the
+    separate passes it replaces: per-file non-empty line counts minus
+    one header each, and the odd-parity line count of
+    audit_csv_quote_balance."""
+    from pyspark.sql import functions as F
+
+    from unicargo_medallion_data_pipeline_spark.sources.readers import (
+        audit_csv_quote_balance,
+        csv_line_census,
+    )
+
+    def two_pass(path):
+        per_file = (
+            spark.read.text(path)
+            .filter(F.length("value") > 0)
+            .groupBy(F.input_file_name())
+            .count()
+            .collect()
+        )
+        n_raw = sum(max(int(r["count"]) - 1, 0) for r in per_file)
+        return n_raw, audit_csv_quote_balance(spark, path).count()
+
+    header = "doc_id,lang,score\n"
+    cases = {
+        "multi": {
+            "a.csv": header + "1,en,0.9\n2,de,0.5\n",
+            "b.csv": header + "3,fr,0.1\n",
+            "c.csv": header,
+        },
+        "zero_byte": {"z.csv": ""},
+        "trailing_blank": {"t.csv": header + "1,en,0.9\n\n\n"},
+        "escaped_quotes": {"e.csv": header + '1,"say \\"hi\\" twice",0.9\n2,"x",0.5\n'},
+        "quoted_newline": {"q.csv": header + '1,"Line\nBreak",0.9\n2,de,0.5\n'},
+    }
+    expected = {
+        "multi": (3, 0),
+        "zero_byte": (0, 0),
+        "trailing_blank": (1, 0),
+        "escaped_quotes": (2, 0),
+        "quoted_newline": (3, 2),
+    }
+    for case, files in cases.items():
+        d = tmp_path / case
+        d.mkdir()
+        for name, text in files.items():
+            (d / name).write_text(text)
+        path = str(d) if len(files) > 1 else str(d / next(iter(files)))
+        got = csv_line_census(spark, path)
+        assert got == two_pass(path), case
+        assert got == expected[case], case
+
+
 def test_read_orc_and_xml_or_empty_narrow_like_parquet(spark, tmp_path):
     """r12 verdict task 5: every maintained-table format shares the
     narrowed absent-state discrimination — absent path / zero data files

@@ -5,12 +5,24 @@ Reference counterpart: the notebook chain sequenced by job dependencies
 materializes before the next reads it — the medallion contract the
 reference establishes (no cross-stage plan fusion), which also keeps
 per-table correctness checks possible.
+
+Within a layer the writes are independent (distinct target tables over
+read-only inputs), so every layer fans them out from driver threads
+through ``_fan_out``: bronze over its entities, silver over its four
+tables, gold over its suite.  At pipeline scale each write is a few
+small Spark jobs that leave most cores idle, so overlapping them hides
+per-job scheduling and catalog latency.  Between layers there is a
+barrier: bronze returns before silver starts, and the quality gate runs
+before gold.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,6 +37,7 @@ from unicargo_medallion_data_pipeline_spark.schemas.flights import (
     FLIGHTS_SCHEMA,
 )
 from unicargo_medallion_data_pipeline_spark.sources.readers import (
+    csv_line_census,
     read_csv,
     read_csv_with_quarantine,
 )
@@ -45,6 +58,34 @@ class MedallionResult:
     quality: dict[str, dict] = field(default_factory=dict)
 
 
+def _fan_out(fn, items, width: int) -> list:
+    """``[fn(x) for x in items]`` with up to ``width`` calls in flight
+    from driver threads, submitted in item order.  ``width`` <= 1 runs
+    serially in the calling thread.  On a failure, ``Executor.map``
+    cancels the calls not yet started, and the ``with`` block re-raises
+    only once the running calls have returned, so each call's own
+    cleanup has run."""
+    items = list(items)
+    if width <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    with ThreadPoolExecutor(max_workers=min(width, len(items))) as ex:
+        return list(ex.map(fn, items))
+
+
+def _once(fn):
+    """``fn`` wrapped to run at most once; a concurrent caller blocks
+    until the running call returns."""
+    lock, done = threading.Lock(), []
+
+    def call():
+        with lock:
+            if not done:
+                fn()
+                done.append(True)
+
+    return call
+
+
 def run_bronze(
     spark: SparkSession,
     csv_paths: dict[str, str],
@@ -62,7 +103,14 @@ def run_bronze(
     as silently-nulled cells, and a row-conservation gate (good +
     quarantined == raw data lines) raises if the split ever loses or
     fabricates rows.  ``quarantine=False`` keeps the reference's
-    PERMISSIVE single-table behavior."""
+    PERMISSIVE single-table behavior.
+
+    The entities ingest concurrently (``_fan_out``, width = entity
+    count); each keeps its own census → staged writes → conservation
+    gate → promote sequence and its own staging cleanup, so an entity
+    that fails leaves its previous tables untouched and no staging table
+    behind, while the others still publish.  The call raises once every
+    entity has finished."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -71,95 +119,89 @@ def run_bronze(
         "airlines": AIRLINES_SCHEMA,
         "airports": AIRPORTS_SCHEMA,
     }
-    out: dict[str, DataFrame] = {}
-    for entity, path in csv_paths.items():
+    ensure_database(spark, f"{environment}_bronze")
+
+    def ingest(entity: str) -> DataFrame:
+        path = csv_paths[entity]
         cfg = get_table_config(entity, "bronze", environment, config)
-        if quarantine:
-            good, bad = read_csv_with_quarantine(spark, path, schemas[entity])
-            # Row conservation: every raw data line is either typed or
-            # quarantined.  "Raw data lines" = NON-EMPTY lines minus one
-            # header per file that has any lines: the CSV parser skips
-            # blank lines entirely (so counting them would make this
-            # gate falsely abort a lossless ingest over a trailing
-            # newline), and a zero-byte file contributes no header.
-            # The good/bad counts ride the two table writes as observe()
-            # metrics (r8 verdict task 5) instead of running dedicated
-            # count() jobs — so the gate costs ONE extra action (this
-            # independent raw-text census; the writes run regardless).
-            # observe() metrics only exist AFTER the write action, so
-            # both writes go to STAGING names and are promoted (DROP +
-            # RENAME, metadata-only) once the gate passes — a lossy
-            # split aborts with the previous good bronze + quarantine
-            # tables untouched, instead of having already overwritten
-            # them (round-10 ADVICE item 2).
-            per_file = (
-                spark.read.text(path)
-                .filter(F.length("value") > 0)
-                .groupBy(F.input_file_name())
-                .count()
-                .collect()
-            )
-            n_raw = sum(max(int(r["count"]) - 1, 0) for r in per_file)
-            obs_bad = Observation()
-            qcfg = replace(cfg, table=f"{cfg.table}_quarantine", partition_by=())
-            qcfg_stg = replace(qcfg, table=f"{qcfg.table}__staging")
-            cfg_stg = replace(cfg, table=f"{cfg.table}__staging")
-            # Any exception on this path — not just the conservation
-            # gate — must not leak a __staging table (round-10 ADVICE:
-            # a failure in the GOOD-side write previously left the
-            # already-written quarantine staging behind), so the whole
-            # staged-write → gate → promote sequence cleans up in one
-            # finally (DROP IF EXISTS is a no-op for the names a
-            # successful promote has already renamed away).
-            try:
-                save_to_table(
-                    bad.observe(obs_bad, F.count(F.lit(1)).alias("n")).withColumn(
-                        "entity", F.lit(entity)
-                    ),
-                    qcfg_stg,
-                    spark,
-                    mode="overwrite",
-                )
-                # Bronze-boundary finite-doubles contract (r12): NaN/±Inf
-                # measurements become NULL here, so every downstream
-                # layer sees finite-or-NULL floats by construction.
-                # Pure codegen'd column expressions — no extra job.
-                df = with_metadata(
-                    with_processed_timestamp(scrub_nonfinite(good)),
-                    {"pipeline_id": pipeline_id, "entity": entity, "layer": "bronze"},
-                )
-                obs_good = Observation()
-                df = df.observe(obs_good, F.count(F.lit(1)).alias("n"))
-                save_to_table(df, cfg_stg, spark, mode="overwrite")
-                n_good = int(obs_good.get["n"])
-                n_bad = int(obs_bad.get["n"])
-                if n_good + n_bad != n_raw:
-                    raise ValueError(
-                        f"{entity}: quarantine split lost rows — raw={n_raw}, "
-                        f"good={n_good}, quarantined={n_bad}"
-                    )
-                # A process crash BETWEEN these two promotes leaves a
-                # newly-promoted quarantine table next to the previous
-                # bronze table — a consistent-per-table but mixed-epoch
-                # pair.  Each promote is individually crash-recoverable
-                # (rename-aside, see promote_table), and re-running the
-                # ingest realigns the pair; tolerated because the two
-                # tables are never joined, only audited side-by-side.
-                promote_table(spark, qcfg_stg.full_name, qcfg.full_name)
-                promote_table(spark, cfg_stg.full_name, cfg.full_name)
-            finally:
-                spark.sql(f"DROP TABLE IF EXISTS {cfg_stg.full_name}")
-                spark.sql(f"DROP TABLE IF EXISTS {qcfg_stg.full_name}")
-        else:
+        meta = {"pipeline_id": pipeline_id, "entity": entity, "layer": "bronze"}
+        if not quarantine:
             df = with_metadata(
                 with_processed_timestamp(
                     scrub_nonfinite(read_csv(spark, path, schemas[entity]))
                 ),
-                {"pipeline_id": pipeline_id, "entity": entity, "layer": "bronze"},
+                meta,
             )
             save_to_table(df, cfg, spark, mode="overwrite")
-        out[entity] = spark.read.table(cfg.full_name)
-    return out
+            return spark.read.table(cfg.full_name)
+        # Row conservation: every raw data line is either typed or
+        # quarantined (raw data lines as counted by csv_line_census).
+        # The good/bad counts ride the two table writes as observe()
+        # metrics (r8 verdict task 5) instead of running dedicated
+        # count() jobs, and the census also counts odd-quote-parity
+        # lines, so the quote audit (a second text scan plus an
+        # exceptAll) runs only when a quoted-newline fragment can exist.
+        # observe() metrics only exist AFTER the write action, so
+        # both writes go to STAGING names and are promoted (DROP +
+        # RENAME, metadata-only) once the gate passes — a lossy
+        # split aborts with the previous good bronze + quarantine
+        # tables untouched, instead of having already overwritten
+        # them (round-10 ADVICE item 2).
+        n_raw, n_odd = csv_line_census(spark, path)
+        good, bad = read_csv_with_quarantine(
+            spark, path, schemas[entity], quote_audit=n_odd > 0
+        )
+        obs_bad = Observation()
+        qcfg = replace(cfg, table=f"{cfg.table}_quarantine", partition_by=())
+        qcfg_stg = replace(qcfg, table=f"{qcfg.table}__staging")
+        cfg_stg = replace(cfg, table=f"{cfg.table}__staging")
+        # Any exception on this path — not just the conservation
+        # gate — must not leak a __staging table (round-10 ADVICE:
+        # a failure in the GOOD-side write previously left the
+        # already-written quarantine staging behind), so the whole
+        # staged-write → gate → promote sequence cleans up in one
+        # finally (DROP IF EXISTS is a no-op for the names a
+        # successful promote has already renamed away).
+        try:
+            save_to_table(
+                bad.observe(obs_bad, F.count(F.lit(1)).alias("n")).withColumn(
+                    "entity", F.lit(entity)
+                ),
+                qcfg_stg,
+                spark,
+                mode="overwrite",
+            )
+            # Bronze-boundary finite-doubles contract (r12): NaN/±Inf
+            # measurements become NULL here, so every downstream
+            # layer sees finite-or-NULL floats by construction.
+            # Pure codegen'd column expressions — no extra job.
+            df = with_metadata(with_processed_timestamp(scrub_nonfinite(good)), meta)
+            obs_good = Observation()
+            df = df.observe(obs_good, F.count(F.lit(1)).alias("n"))
+            save_to_table(df, cfg_stg, spark, mode="overwrite")
+            n_good = int(obs_good.get["n"])
+            n_bad = int(obs_bad.get["n"])
+            if n_good + n_bad != n_raw:
+                raise ValueError(
+                    f"{entity}: quarantine split lost rows — raw={n_raw}, "
+                    f"good={n_good}, quarantined={n_bad}"
+                )
+            # A process crash BETWEEN these two promotes leaves a
+            # newly-promoted quarantine table next to the previous
+            # bronze table — a consistent-per-table but mixed-epoch
+            # pair.  Each promote is individually crash-recoverable
+            # (rename-aside, see promote_table), and re-running the
+            # ingest realigns the pair; tolerated because the two
+            # tables are never joined, only audited side-by-side.
+            promote_table(spark, qcfg_stg.full_name, qcfg.full_name)
+            promote_table(spark, cfg_stg.full_name, cfg.full_name)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {cfg_stg.full_name}")
+            spark.sql(f"DROP TABLE IF EXISTS {qcfg_stg.full_name}")
+        return spark.read.table(cfg.full_name)
+
+    entities = list(csv_paths)
+    return dict(zip(entities, _fan_out(ingest, entities, len(entities))))
 
 
 def run_medallion(
@@ -178,12 +220,17 @@ def run_medallion(
     ``gold`` — the measurement hook ``perfbench/run.py --workload
     medallion_batch`` uses).
 
-    ``gold_parallelism`` > 1 submits that many independent gold tables
-    concurrently from driver threads — the supported Spark pattern for
-    fan-out over a shared (cached) input.  Each gold table is a small
-    aggregate whose single job underuses the cluster; overlapping them
-    hides per-job scheduling + catalog latency.  Results are identical
-    to the serial path (distinct target tables, shared fact read-only)."""
+    Every layer fans its writes out from driver threads (``_fan_out``),
+    with a barrier between layers: the bronze entities ingest
+    concurrently and all finish before silver starts; the four silver
+    tables write concurrently and all finish before the quality gate,
+    which runs before gold.  ``gold_parallelism`` > 1 submits that many
+    independent gold tables concurrently — the supported Spark pattern
+    for fan-out over a shared (cached) input.  Each gold table is a
+    small aggregate whose single job underuses the cluster; overlapping
+    them hides per-job scheduling + catalog latency.  Results are
+    identical to the serial path (distinct target tables, shared fact
+    read-only)."""
     import time as _time
 
     result = MedallionResult()
@@ -212,7 +259,9 @@ def run_medallion(
         "dates": dim_date,
         "flights": fact,
     }
-    for entity, df in silver_tables.items():
+    ensure_database(spark, f"{environment}_silver")
+
+    def write_silver(entity: str) -> str:
         cfg = get_table_config(entity, "silver", environment, config)
         # One file per partition value: the fact partitions by date_sk
         # (~365 values/year), and without clustering every write task
@@ -224,8 +273,8 @@ def run_medallion(
         # clustered by flight_date (the dedup shuffle above, which
         # date_sk maps 1:1 onto), so its write needs no re-clustering —
         # forcing one here would re-shuffle the whole fact a second time.
-        save_to_table(
-            df,
+        return save_to_table(
+            silver_tables[entity],
             cfg,
             spark,
             mode="overwrite",
@@ -233,7 +282,11 @@ def run_medallion(
                 1 if (cfg.partition_by and entity != "flights") else None
             ),
         )
-        result.silver[entity] = cfg.full_name
+
+    entities = list(silver_tables)
+    result.silver.update(
+        zip(entities, _fan_out(write_silver, entities, len(entities)))
+    )
     if timings is not None:
         timings["silver"] = _time.perf_counter() - _t0
         _t0 = _time.perf_counter()
@@ -310,11 +363,9 @@ def _build_gold_suite(
     # construction — integer partials; see the derivation section in
     # pipelines/gold_flights.py and the pinned bitwise-equality test.
     dims = {"dd": dd_t, "da": da_t}
+    route_family = ("route_traffic", "top_routes", "significant_routes", "busiest_routes")
     grain_names = [n for n in names if n in gold_flights.GRAIN_SUITE]
-    route_names = [
-        n for n in names
-        if n in ("route_traffic", "top_routes", "significant_routes", "busiest_routes")
-    ]
+    route_names = [n for n in names if n in route_family]
     grain = (
         gold_flights.build_date_airline_grain(fact_t).persist()
         if grain_names
@@ -325,16 +376,22 @@ def _build_gold_suite(
         if len(route_names) > 1
         else None
     )
-    # Materialize the shared frames BEFORE the fan-out: under
-    # gold_parallelism > 1 the first tables to reference a lazily-cached
-    # frame RACE to compute it (Spark caches on first completion, but
-    # concurrent consumers each run the full aggregation) — measured as
-    # route_traffic and top_routes both paying the ~3s traffic agg.
-    # One count() each pins the cache, then every consumer reuses it.
+    # Materialize each shared frame ONCE, before its consumers write:
+    # under gold_parallelism > 1 the first tables to reference a
+    # lazily-cached frame RACE to compute it (Spark caches on first
+    # completion, but concurrent consumers each run the full
+    # aggregation) — measured as route_traffic and top_routes both
+    # paying the ~3s traffic agg.  The pins are the first tasks
+    # submitted to the pool; a table that reads neither pin starts at
+    # once, and a consumer blocks on its pin (a lock held only while
+    # that pin's count() runs, so any pool width makes progress).
+    pins, pin_of = [], {}  # run-once count() per shared frame; table -> its pin
     if grain is not None:
-        grain.count()
+        pins.append(_once(grain.count))
+        pin_of.update(dict.fromkeys(gold_flights.GRAIN_SUITE, pins[-1]))
     if traffic is not None:
-        traffic.count()
+        pins.append(_once(traffic.count))
+        pin_of.update(dict.fromkeys(route_family, pins[-1]))
 
     def _build_df(name: str):
         if grain is not None and name in gold_flights.GRAIN_SUITE:
@@ -353,28 +410,31 @@ def _build_gold_suite(
         return gold_flights.GOLD_SUITE[name](*needs[name])
 
     def _write_one(name: str) -> tuple[str, str, float]:
+        if name in pin_of:
+            pin_of[name]()
         df = _build_df(name)
         full_name = f"{environment}_gold.{name}"
         _tg = _time.perf_counter()
         df.write.mode("overwrite").format("parquet").saveAsTable(full_name)
         return name, full_name, _time.perf_counter() - _tg
 
+    # Pins first, then the tables that read neither pin (free workers
+    # start them while the pins run), then the pin consumers.  The
+    # serial path keeps the suite order.
+    order = names
+    if gold_parallelism > 1:
+        order = sorted(names, key=lambda n: n in pin_of)
+    tasks = [*pins, *(partial(_write_one, n) for n in order)]
     try:
-        if gold_parallelism > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=gold_parallelism) as ex:
-                outcomes = list(ex.map(_write_one, names))
-        else:
-            outcomes = [_write_one(n) for n in names]
+        outcomes = _fan_out(lambda task: task(), tasks, gold_parallelism)[len(pins):]
     finally:
         if grain is not None:
             grain.unpersist()
         if traffic is not None:
             traffic.unpersist()
-    for name, full_name, sec in outcomes:
-        per_table[name] = sec
-        result.gold[name] = full_name
+    written = {name: (full_name, sec) for name, full_name, sec in outcomes}
+    for name in names:
+        result.gold[name], per_table[name] = written[name]
     if timings is not None:
         timings["gold"] = _time.perf_counter() - _t0
         timings["gold_tables"] = per_table

@@ -63,32 +63,28 @@ def build_dim_date(
     end: str = "2030-12-31",
 ) -> DataFrame:
     """Generated date dimension, one row per day (5,844 rows for the
-    reference's range).  Driver-side generation is correct here: the dim is
-    tiny and *generated*, not derived from data."""
+    reference's range; none when ``end`` precedes ``start``).  Built from
+    ``spark.range`` and date functions, so it plans as a codegen'd Range
+    scan: no driver-side row list to pickle, no Python worker.  The
+    result has ``DIM_DATE_SCHEMA`` exactly under ANSI mode (the Spark 4
+    default); with ANSI off Spark marks the two ``element_at`` name
+    columns nullable, though they never hold a NULL."""
     d0 = dt.date.fromisoformat(start)
-    d1 = dt.date.fromisoformat(end)
-    rows = []
-    d = d0
-    sk = 1
-    while d <= d1:
-        iso_dow = d.isoweekday()  # Monday=1..Sunday=7 (reference convention)
-        rows.append(
-            (
-                sk,
-                d,
-                d.year,
-                d.month,
-                d.day,
-                iso_dow,
-                _DAY_NAMES[iso_dow - 1],
-                _MONTH_NAMES[d.month - 1],
-                (d.month - 1) // 3 + 1,
-                1 if iso_dow >= 6 else 0,
-            )
-        )
-        d += dt.timedelta(days=1)
-        sk += 1
-    return spark.createDataFrame(rows, DIM_DATE_SCHEMA)
+    n_days = max((dt.date.fromisoformat(end) - d0).days + 1, 0)
+    d = F.date_add(F.lit(d0), F.col("id").cast("int"))
+    iso_dow = F.weekday(d) + 1  # Monday=1..Sunday=7 (reference convention)
+    return spark.range(n_days).select(
+        (F.col("id") + 1).cast("int").alias("date_sk"),
+        d.alias("full_date"),
+        F.year(d).alias("year"),
+        F.month(d).alias("month"),
+        F.dayofmonth(d).alias("day"),
+        iso_dow.alias("day_of_week"),
+        F.element_at(F.array(*map(F.lit, _DAY_NAMES)), iso_dow).alias("day_name"),
+        F.element_at(F.array(*map(F.lit, _MONTH_NAMES)), F.month(d)).alias("month_name"),
+        F.quarter(d).alias("quarter"),
+        (iso_dow >= 6).cast("int").alias("is_weekend"),
+    )
 
 
 def build_dim_airline(airlines_raw: DataFrame) -> DataFrame:

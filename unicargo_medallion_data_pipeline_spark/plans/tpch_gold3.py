@@ -38,8 +38,8 @@ from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
 def generated_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 — generated date dimension (reference:
     ``02_silver_unicargo_create_dim_date.ipynb`` cells 2-8), bounded to the
-    orders date range so the oracle is cheap.  Driver-side generation is
-    correct for a generated dim: 731 rows, no data dependency."""
+    orders date range so the oracle is cheap: 731 rows from a Range scan,
+    no data dependency."""
     from unicargo_medallion_data_pipeline_spark.pipelines.silver import build_dim_date
 
     del sf_dir

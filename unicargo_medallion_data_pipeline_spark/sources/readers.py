@@ -117,11 +117,17 @@ def read_csv_with_quarantine(
     still balances: every physical data line lands in exactly one of
     (good, quarantine).
 
-    Cost model: the audit is one extra text scan; the multiset
-    subtraction (``exceptAll``, which shuffles the good side) runs ONLY
-    when fragments actually exist — violation-free ingest pays the scan
-    and nothing else.  ``quote_audit=False`` restores the pure
-    one-pass r11 behavior for trusted producers.
+    Cost model: the audit is one extra text scan plus a pinned
+    ``exceptAll`` of the odd-parity lines against the quarantine side;
+    the subtraction from the good frame (``exceptAll``, which shuffles
+    the good side) runs ONLY when fragments actually exist.  A caller
+    that already knows the input has no odd-parity line skips all of it
+    with ``quote_audit=False``: ``run_bronze`` counts odd-parity lines
+    in its conservation census (``csv_line_census``, the same text scan
+    that counts raw lines) and passes ``quote_audit=n_odd > 0``, so a
+    violation-free ingest pays that one census scan and nothing else.
+    ``quote_audit=False`` is also the pure one-pass r11 behavior for
+    trusted producers.
 
     Residual (documented) hazards: a cell containing MULTIPLE raw
     newlines has balanced interior lines that parse as plausible rows
@@ -219,11 +225,44 @@ def audit_csv_quote_balance(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     lines = spark.read.text(path).select(F.col("value").alias("raw_line"))
-    unescaped = F.regexp_replace("raw_line", r"\\.", "")
-    n_quotes = (
-        F.length(unescaped) - F.length(F.regexp_replace(unescaped, '"', ""))
-    ).alias("n_quotes")
-    return lines.select("raw_line", n_quotes).filter(F.col("n_quotes") % 2 == 1)
+    return lines.select("raw_line", _quote_count("raw_line").alias("n_quotes")).filter(
+        F.col("n_quotes") % 2 == 1
+    )
+
+
+def _quote_count(col: str):
+    """Unescaped double quotes in a text line (the parity count of
+    ``audit_csv_quote_balance``): escape-prefixed characters are
+    dropped before counting."""
+    from pyspark.sql import functions as F
+
+    unescaped = F.regexp_replace(col, r"\\.", "")
+    return F.length(unescaped) - F.length(F.regexp_replace(unescaped, '"', ""))
+
+
+def csv_line_census(spark: SparkSession, path: str) -> tuple[int, int]:
+    """``(n_raw, n_odd)`` for a CSV file or directory, from one text scan.
+
+    ``n_raw`` is the number of data lines: NON-EMPTY lines minus one
+    header per file that has any.  The CSV parser skips blank lines (so
+    a trailing newline is not a record) and a zero-byte file has no
+    header.  ``n_odd`` is the number of lines with odd quote parity,
+    i.e. ``audit_csv_quote_balance(spark, path).count()``: zero means
+    no quoted-newline fragment can exist, so the quarantine reader's
+    quote audit has nothing to find."""
+    from pyspark.sql import functions as F
+
+    per_file = (
+        spark.read.text(path)
+        .groupBy(F.input_file_name())
+        .agg(
+            F.count_if(F.length("value") > 0).alias("n"),
+            F.count_if(_quote_count("value") % 2 == 1).alias("odd"),
+        )
+        .collect()
+    )
+    n_raw = sum(max(int(r["n"]) - 1, 0) for r in per_file)
+    return n_raw, sum(int(r["odd"]) for r in per_file)
 
 
 def read_jsonl_with_quarantine(
