@@ -195,9 +195,7 @@ def test_gold_parallelism_matches_serial(spark, medallion, flight_fixture_dir, t
     """gold_parallelism>1 must produce bitwise-identical gold tables to
     the serial path (distinct targets, shared read-only cached fact) —
     the correctness contract behind the bench's concurrent fan-out.
-    Width 2 is fewer workers than the two shared-frame pins plus the
-    tables, so it also proves a consumer waiting on its pin cannot
-    starve the pool."""
+    Width 2 (far fewer workers than tables) must match as well."""
     from unicargo_medallion_data_pipeline_spark.pipelines.medallion import run_medallion
 
     for width in (4, 2):
@@ -490,6 +488,14 @@ def test_build_dim_date_equals_driver_side_rows(spark):
         assert want.exceptAll(got).count() == 0, (start, end)
         assert got.count() == n, (start, end)
         assert "ExistingRDD" not in executed_plan_text(got), (start, end)
+    # The schema must not depend on the session's ANSI setting.
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", flag)
+            assert build_dim_date(spark, "2016-02-28", "2016-03-01").schema == DIM_DATE_SCHEMA, flag
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def _three_entity_csvs(flight_fixture_dir, d):
@@ -577,36 +583,54 @@ def test_concurrent_bronze_failure_is_isolated(spark, monkeypatch, flight_fixtur
     assert left == []
 
 
-def test_fan_out_pins_run_once_and_failures_cancel_pending():
-    """_once runs its function exactly once however many pool workers
-    (more than cores, with a shortened switch interval) wait on it, and
-    every waiter sees it finished; a failing _fan_out call re-raises and
-    cancels the calls not yet started."""
-    import sys
+def test_bronze_writer_calls_never_overlap(spark, monkeypatch, flight_fixture_dir):
+    """The bronze entities ingest from concurrent threads, but their
+    calls into save_to_table and promote_table (module attributes that
+    a caller may wrap, e.g. in tracing spans that must nest) never run
+    at the same time."""
+    import tempfile
+    import threading
     import time
 
-    from unicargo_medallion_data_pipeline_spark.pipelines.medallion import _fan_out, _once
+    from unicargo_medallion_data_pipeline_spark.pipelines import medallion as med
 
-    calls = []
+    guard, active, peak, threads = threading.Lock(), [0], [0], set()
 
-    def slow_pin():
-        time.sleep(0.05)
-        calls.append(1)
+    def watched(fn):
+        def call(*args, **kwargs):
+            with guard:
+                threads.add(threading.get_ident())
+                active[0] += 1
+                peak[0] = max(peak[0], active[0])
+            try:
+                time.sleep(0.05)  # widen the window an overlap would need
+                return fn(*args, **kwargs)
+            finally:
+                with guard:
+                    active[0] -= 1
 
-    pin = _once(slow_pin)
+        return call
 
-    def consumer(_):
-        pin()
-        return len(calls)
+    monkeypatch.setattr(med, "save_to_table", watched(med.save_to_table))
+    monkeypatch.setattr(med, "promote_table", watched(med.promote_table))
+    paths = _three_entity_csvs(flight_fixture_dir, tempfile.mkdtemp(prefix="turns_"))
+    cfg = _bronze_cfg("turns", tempfile.mkdtemp(prefix="turnswh_"))
+    out = med.run_bronze(spark, paths, environment="turns", config=cfg)
+    assert set(out) == set(paths)
+    assert spark.read.table("turns_bronze.airlines_raw").count() == 2
+    assert len(threads) == len(paths)  # one fan-out thread per entity
+    assert peak[0] == 1
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        seen = _fan_out(consumer, range(64), 16)
-    finally:
-        sys.setswitchinterval(old)
-    assert calls == [1]
-    assert seen == [1] * 64
+
+def test_fan_out_keeps_order_and_failures_cancel_pending():
+    """_fan_out returns results in item order at any width, and a
+    failing call re-raises and cancels the calls not yet started."""
+    import time
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.medallion import _fan_out
+
+    for width in (1, 3, 16):
+        assert _fan_out(lambda i: i * i, range(10), width) == [i * i for i in range(10)]
 
     started = []
 

@@ -7,13 +7,17 @@ reference establishes (no cross-stage plan fusion), which also keeps
 per-table correctness checks possible.
 
 Within a layer the writes are independent (distinct target tables over
-read-only inputs), so every layer fans them out from driver threads
-through ``_fan_out``: bronze over its entities, silver over its four
-tables, gold over its suite.  At pipeline scale each write is a few
-small Spark jobs that leave most cores idle, so overlapping them hides
-per-job scheduling and catalog latency.  Between layers there is a
-barrier: bronze returns before silver starts, and the quality gate runs
-before gold.
+read-only inputs).  Bronze ingests its entities and gold writes its
+suite concurrently from driver threads, both through ``_fan_out``: at
+pipeline scale each write is a few small Spark jobs that leave most
+cores idle, so overlapping them hides per-job scheduling and catalog
+latency.  Bronze's calls into ``save_to_table`` and ``promote_table``
+take turns (``_WRITER_LOCK``), so what overlaps there is each entity's
+census scan and parse.  Silver writes its four tables one after
+another: each is a single ``save_to_table`` call, so a fan-out would
+have nothing left to overlap.  Between layers there is a barrier:
+bronze returns before silver starts, and the quality gate runs before
+gold.
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ import logging
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,6 +52,14 @@ from unicargo_medallion_data_pipeline_spark.sources.writers import (
 
 log = logging.getLogger(__name__)
 
+#: Serializes the writer entry points (``save_to_table``,
+#: ``promote_table``) across bronze's fan-out threads.  Callers look
+#: them up as attributes of this module, so a caller may wrap them,
+#: e.g. in tracing spans that must nest (``perfbench/spans.py`` keeps
+#: one span stack for all threads); the lock keeps such wrappers
+#: single-threaded.
+_WRITER_LOCK = threading.Lock()
+
 
 @dataclass
 class MedallionResult:
@@ -72,20 +83,6 @@ def _fan_out(fn, items, width: int) -> list:
         return list(ex.map(fn, items))
 
 
-def _once(fn):
-    """``fn`` wrapped to run at most once; a concurrent caller blocks
-    until the running call returns."""
-    lock, done = threading.Lock(), []
-
-    def call():
-        with lock:
-            if not done:
-                fn()
-                done.append(True)
-
-    return call
-
-
 def run_bronze(
     spark: SparkSession,
     csv_paths: dict[str, str],
@@ -106,11 +103,12 @@ def run_bronze(
     PERMISSIVE single-table behavior.
 
     The entities ingest concurrently (``_fan_out``, width = entity
-    count); each keeps its own census → staged writes → conservation
-    gate → promote sequence and its own staging cleanup, so an entity
-    that fails leaves its previous tables untouched and no staging table
-    behind, while the others still publish.  The call raises once every
-    entity has finished."""
+    count): their census scans and parses overlap, while their staged
+    writes, conservation gates and promotes take turns under
+    ``_WRITER_LOCK``.  Each entity keeps its own staging cleanup, so an
+    entity that fails leaves its previous tables untouched and no
+    staging table behind, while the others still publish.  The call
+    raises once every entity has finished."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -132,7 +130,8 @@ def run_bronze(
                 ),
                 meta,
             )
-            save_to_table(df, cfg, spark, mode="overwrite")
+            with _WRITER_LOCK:
+                save_to_table(df, cfg, spark, mode="overwrite")
             return spark.read.table(cfg.full_name)
         # Row conservation: every raw data line is either typed or
         # quarantined (raw data lines as counted by csv_line_census).
@@ -163,38 +162,39 @@ def run_bronze(
         # finally (DROP IF EXISTS is a no-op for the names a
         # successful promote has already renamed away).
         try:
-            save_to_table(
-                bad.observe(obs_bad, F.count(F.lit(1)).alias("n")).withColumn(
-                    "entity", F.lit(entity)
-                ),
-                qcfg_stg,
-                spark,
-                mode="overwrite",
-            )
-            # Bronze-boundary finite-doubles contract (r12): NaN/±Inf
-            # measurements become NULL here, so every downstream
-            # layer sees finite-or-NULL floats by construction.
-            # Pure codegen'd column expressions — no extra job.
-            df = with_metadata(with_processed_timestamp(scrub_nonfinite(good)), meta)
-            obs_good = Observation()
-            df = df.observe(obs_good, F.count(F.lit(1)).alias("n"))
-            save_to_table(df, cfg_stg, spark, mode="overwrite")
-            n_good = int(obs_good.get["n"])
-            n_bad = int(obs_bad.get["n"])
-            if n_good + n_bad != n_raw:
-                raise ValueError(
-                    f"{entity}: quarantine split lost rows — raw={n_raw}, "
-                    f"good={n_good}, quarantined={n_bad}"
+            with _WRITER_LOCK:
+                save_to_table(
+                    bad.observe(obs_bad, F.count(F.lit(1)).alias("n")).withColumn(
+                        "entity", F.lit(entity)
+                    ),
+                    qcfg_stg,
+                    spark,
+                    mode="overwrite",
                 )
-            # A process crash BETWEEN these two promotes leaves a
-            # newly-promoted quarantine table next to the previous
-            # bronze table — a consistent-per-table but mixed-epoch
-            # pair.  Each promote is individually crash-recoverable
-            # (rename-aside, see promote_table), and re-running the
-            # ingest realigns the pair; tolerated because the two
-            # tables are never joined, only audited side-by-side.
-            promote_table(spark, qcfg_stg.full_name, qcfg.full_name)
-            promote_table(spark, cfg_stg.full_name, cfg.full_name)
+                # Bronze-boundary finite-doubles contract (r12): NaN/±Inf
+                # measurements become NULL here, so every downstream
+                # layer sees finite-or-NULL floats by construction.
+                # Pure codegen'd column expressions — no extra job.
+                df = with_metadata(with_processed_timestamp(scrub_nonfinite(good)), meta)
+                obs_good = Observation()
+                df = df.observe(obs_good, F.count(F.lit(1)).alias("n"))
+                save_to_table(df, cfg_stg, spark, mode="overwrite")
+                n_good = int(obs_good.get["n"])
+                n_bad = int(obs_bad.get["n"])
+                if n_good + n_bad != n_raw:
+                    raise ValueError(
+                        f"{entity}: quarantine split lost rows — raw={n_raw}, "
+                        f"good={n_good}, quarantined={n_bad}"
+                    )
+                # A process crash BETWEEN these two promotes leaves a
+                # newly-promoted quarantine table next to the previous
+                # bronze table — a consistent-per-table but mixed-epoch
+                # pair.  Each promote is individually crash-recoverable
+                # (rename-aside, see promote_table), and re-running the
+                # ingest realigns the pair; tolerated because the two
+                # tables are never joined, only audited side-by-side.
+                promote_table(spark, qcfg_stg.full_name, qcfg.full_name)
+                promote_table(spark, cfg_stg.full_name, cfg.full_name)
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {cfg_stg.full_name}")
             spark.sql(f"DROP TABLE IF EXISTS {qcfg_stg.full_name}")
@@ -220,17 +220,15 @@ def run_medallion(
     ``gold`` — the measurement hook ``perfbench/run.py --workload
     medallion_batch`` uses).
 
-    Every layer fans its writes out from driver threads (``_fan_out``),
-    with a barrier between layers: the bronze entities ingest
-    concurrently and all finish before silver starts; the four silver
-    tables write concurrently and all finish before the quality gate,
-    which runs before gold.  ``gold_parallelism`` > 1 submits that many
-    independent gold tables concurrently — the supported Spark pattern
-    for fan-out over a shared (cached) input.  Each gold table is a
-    small aggregate whose single job underuses the cluster; overlapping
-    them hides per-job scheduling + catalog latency.  Results are
-    identical to the serial path (distinct target tables, shared fact
-    read-only)."""
+    Bronze ingests its entities concurrently and returns before silver
+    starts; silver writes its four tables in turn; the quality gate
+    runs before gold (see the module docstring).  ``gold_parallelism``
+    > 1 submits that many independent gold tables concurrently from
+    driver threads — the supported Spark pattern for fan-out over a
+    shared (cached) input.  Each gold table is a small aggregate whose
+    single job underuses the cluster; overlapping them hides per-job
+    scheduling + catalog latency.  Results are identical to the serial
+    path (distinct target tables, shared fact read-only)."""
     import time as _time
 
     result = MedallionResult()
@@ -259,9 +257,7 @@ def run_medallion(
         "dates": dim_date,
         "flights": fact,
     }
-    ensure_database(spark, f"{environment}_silver")
-
-    def write_silver(entity: str) -> str:
+    for entity, df in silver_tables.items():
         cfg = get_table_config(entity, "silver", environment, config)
         # One file per partition value: the fact partitions by date_sk
         # (~365 values/year), and without clustering every write task
@@ -273,8 +269,8 @@ def run_medallion(
         # clustered by flight_date (the dedup shuffle above, which
         # date_sk maps 1:1 onto), so its write needs no re-clustering —
         # forcing one here would re-shuffle the whole fact a second time.
-        return save_to_table(
-            silver_tables[entity],
+        save_to_table(
+            df,
             cfg,
             spark,
             mode="overwrite",
@@ -282,11 +278,7 @@ def run_medallion(
                 1 if (cfg.partition_by and entity != "flights") else None
             ),
         )
-
-    entities = list(silver_tables)
-    result.silver.update(
-        zip(entities, _fan_out(write_silver, entities, len(entities)))
-    )
+        result.silver[entity] = cfg.full_name
     if timings is not None:
         timings["silver"] = _time.perf_counter() - _t0
         _t0 = _time.perf_counter()
@@ -363,9 +355,11 @@ def _build_gold_suite(
     # construction — integer partials; see the derivation section in
     # pipelines/gold_flights.py and the pinned bitwise-equality test.
     dims = {"dd": dd_t, "da": da_t}
-    route_family = ("route_traffic", "top_routes", "significant_routes", "busiest_routes")
     grain_names = [n for n in names if n in gold_flights.GRAIN_SUITE]
-    route_names = [n for n in names if n in route_family]
+    route_names = [
+        n for n in names
+        if n in ("route_traffic", "top_routes", "significant_routes", "busiest_routes")
+    ]
     grain = (
         gold_flights.build_date_airline_grain(fact_t).persist()
         if grain_names
@@ -376,22 +370,16 @@ def _build_gold_suite(
         if len(route_names) > 1
         else None
     )
-    # Materialize each shared frame ONCE, before its consumers write:
-    # under gold_parallelism > 1 the first tables to reference a
-    # lazily-cached frame RACE to compute it (Spark caches on first
-    # completion, but concurrent consumers each run the full
-    # aggregation) — measured as route_traffic and top_routes both
-    # paying the ~3s traffic agg.  The pins are the first tasks
-    # submitted to the pool; a table that reads neither pin starts at
-    # once, and a consumer blocks on its pin (a lock held only while
-    # that pin's count() runs, so any pool width makes progress).
-    pins, pin_of = [], {}  # run-once count() per shared frame; table -> its pin
+    # Materialize the shared frames BEFORE the fan-out: under
+    # gold_parallelism > 1 the first tables to reference a lazily-cached
+    # frame RACE to compute it (Spark caches on first completion, but
+    # concurrent consumers each run the full aggregation) — measured as
+    # route_traffic and top_routes both paying the ~3s traffic agg.
+    # One count() each pins the cache, then every consumer reuses it.
     if grain is not None:
-        pins.append(_once(grain.count))
-        pin_of.update(dict.fromkeys(gold_flights.GRAIN_SUITE, pins[-1]))
+        grain.count()
     if traffic is not None:
-        pins.append(_once(traffic.count))
-        pin_of.update(dict.fromkeys(route_family, pins[-1]))
+        traffic.count()
 
     def _build_df(name: str):
         if grain is not None and name in gold_flights.GRAIN_SUITE:
@@ -410,31 +398,22 @@ def _build_gold_suite(
         return gold_flights.GOLD_SUITE[name](*needs[name])
 
     def _write_one(name: str) -> tuple[str, str, float]:
-        if name in pin_of:
-            pin_of[name]()
         df = _build_df(name)
         full_name = f"{environment}_gold.{name}"
         _tg = _time.perf_counter()
         df.write.mode("overwrite").format("parquet").saveAsTable(full_name)
         return name, full_name, _time.perf_counter() - _tg
 
-    # Pins first, then the tables that read neither pin (free workers
-    # start them while the pins run), then the pin consumers.  The
-    # serial path keeps the suite order.
-    order = names
-    if gold_parallelism > 1:
-        order = sorted(names, key=lambda n: n in pin_of)
-    tasks = [*pins, *(partial(_write_one, n) for n in order)]
     try:
-        outcomes = _fan_out(lambda task: task(), tasks, gold_parallelism)[len(pins):]
+        outcomes = _fan_out(_write_one, names, gold_parallelism)
     finally:
         if grain is not None:
             grain.unpersist()
         if traffic is not None:
             traffic.unpersist()
-    written = {name: (full_name, sec) for name, full_name, sec in outcomes}
-    for name in names:
-        result.gold[name], per_table[name] = written[name]
+    for name, full_name, sec in outcomes:
+        per_table[name] = sec
+        result.gold[name] = full_name
     if timings is not None:
         timings["gold"] = _time.perf_counter() - _t0
         timings["gold_tables"] = per_table

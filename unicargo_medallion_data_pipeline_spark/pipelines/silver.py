@@ -65,10 +65,9 @@ def build_dim_date(
     """Generated date dimension, one row per day (5,844 rows for the
     reference's range; none when ``end`` precedes ``start``).  Built from
     ``spark.range`` and date functions, so it plans as a codegen'd Range
-    scan: no driver-side row list to pickle, no Python worker.  The
-    result has ``DIM_DATE_SCHEMA`` exactly under ANSI mode (the Spark 4
-    default); with ANSI off Spark marks the two ``element_at`` name
-    columns nullable, though they never hold a NULL."""
+    scan: no driver-side row list to pickle, no Python worker.  Every
+    column is non-nullable whatever ``spark.sql.ansi.enabled`` says, so
+    the result has ``DIM_DATE_SCHEMA`` exactly."""
     d0 = dt.date.fromisoformat(start)
     n_days = max((dt.date.fromisoformat(end) - d0).days + 1, 0)
     d = F.date_add(F.lit(d0), F.col("id").cast("int"))
@@ -80,11 +79,21 @@ def build_dim_date(
         F.month(d).alias("month"),
         F.dayofmonth(d).alias("day"),
         iso_dow.alias("day_of_week"),
-        F.element_at(F.array(*map(F.lit, _DAY_NAMES)), iso_dow).alias("day_name"),
-        F.element_at(F.array(*map(F.lit, _MONTH_NAMES)), F.month(d)).alias("month_name"),
+        _name_of(iso_dow, _DAY_NAMES).alias("day_name"),
+        _name_of(F.month(d), _MONTH_NAMES).alias("month_name"),
         F.quarter(d).alias("quarter"),
         (iso_dow >= 6).cast("int").alias("is_weekend"),
     )
+
+
+def _name_of(idx, names):
+    """``names[idx - 1]`` for a 1-based ``idx`` in range, as a CASE over
+    literals: unlike ``element_at``, whose result is nullable when ANSI
+    mode is off, a CASE whose branches are all literals is never NULL."""
+    case = F.when(idx == 1, names[0])
+    for i, name in enumerate(names[1:-1], 2):
+        case = case.when(idx == i, name)
+    return case.otherwise(names[-1])
 
 
 def build_dim_airline(airlines_raw: DataFrame) -> DataFrame:
