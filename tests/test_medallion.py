@@ -285,8 +285,8 @@ def test_quarantine_gate_failure_preserves_previous_bronze(spark, monkeypatch):
 
 def test_grain_derived_gold_matches_direct(spark, medallion):
     """Round-10 verdict task 6: every gold table the medallion driver
-    derives from the shared (date, airline) grain — and the two
-    route-traffic-derived tables — must equal the direct fact builders
+    derives from the shared (date, airline) grain — and the
+    route-traffic-derived ROUTE_SUITE tables — must equal the direct fact builders
     BITWISE (exceptAll both ways, schema equality).  The grain partials
     are exact longs, so even the double avg/rate columns must match
     bit-for-bit (see the derivation note in gold_flights.py)."""
@@ -296,21 +296,16 @@ def test_grain_derived_gold_matches_direct(spark, medallion):
     da = spark.read.table(medallion.silver["airlines"])
     dp = spark.read.table(medallion.silver["airports"])
     dd = spark.read.table(medallion.silver["dates"])
-    dims = {"dd": dd, "da": da}
-    needs_direct = {
-        "airline_operational_summary": (fact, da),
-        "daily_flight_summary": (fact, dd, da),
-        "monthly_flight_trends": (fact, dd, da),
-        "airline_day_of_week": (fact, dd, da),
-        "seasonal_flight_summary": (fact, dd),
-        "weekend_weekday_split": (fact, dd, da),
-        "quarterly_flight_summary": (fact, dd, da),
-        "rolling_on_time_performance": (fact, dd, da),
-    }
+    dims = {"dd": dd, "da": da, "dp": dp}
+
+    def direct_of(name):
+        fn, needed = g.GOLD_SUITE[name]
+        return fn(fact, *[dims[d] for d in needed])
+
     grain = g.build_date_airline_grain(fact).persist()
     try:
         for name, (fn, needed) in g.GRAIN_SUITE.items():
-            direct = g.GOLD_SUITE[name](*needs_direct[name])
+            direct = direct_of(name)
             derived = fn(grain, *[dims[d] for d in needed])
             assert derived.schema == direct.schema, name
             assert (
@@ -321,16 +316,8 @@ def test_grain_derived_gold_matches_direct(spark, medallion):
         grain.unpersist()
     traffic = g.route_traffic(fact, dp).persist()
     try:
-        pairs = [
-            ("significant_routes", g.significant_routes(fact, dp),
-             g.significant_routes_from_traffic(traffic)),
-            ("busiest_routes", g.busiest_routes(fact, dp),
-             g.top_routes_from_traffic(traffic, 50)),
-            # round-11 pipelines hunt: top_routes joined the shared family
-            ("top_routes", g.top_routes(fact, dp, 10),
-             g.top_routes_from_traffic(traffic, 10)),
-        ]
-        for name, direct, derived in pairs:
+        for name, fn in g.ROUTE_SUITE.items():
+            direct, derived = direct_of(name), fn(traffic)
             assert derived.schema == direct.schema, name
             assert (
                 direct.exceptAll(derived).count() == 0
@@ -620,28 +607,3 @@ def test_bronze_writer_calls_never_overlap(spark, monkeypatch, flight_fixture_di
     assert spark.read.table("turns_bronze.airlines_raw").count() == 2
     assert len(threads) == len(paths)  # one fan-out thread per entity
     assert peak[0] == 1
-
-
-def test_fan_out_keeps_order_and_failures_cancel_pending():
-    """_fan_out returns results in item order at any width, and a
-    failing call re-raises and cancels the calls not yet started."""
-    import time
-
-    from unicargo_medallion_data_pipeline_spark.pipelines.medallion import _fan_out
-
-    for width in (1, 3, 16):
-        assert _fan_out(lambda i: i * i, range(10), width) == [i * i for i in range(10)]
-
-    started = []
-
-    def fail_first(i):
-        started.append(i)
-        if i == 0:
-            raise ValueError("boom")
-        time.sleep(0.2)
-
-    t0 = time.perf_counter()
-    with pytest.raises(ValueError, match="boom"):
-        _fan_out(fail_first, range(20), 2)
-    assert len(started) < 20
-    assert time.perf_counter() - t0 < 5

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -87,10 +88,13 @@ def test_failed_entity_leaves_no_stale_result(spark):
     assert "beta" in result.results
 
 
-def test_cli_runs_medallion_on_fixture_csvs(flight_fixture_dir):
+def test_cli_runs_medallion_on_fixture_csvs(spark, flight_fixture_dir):
     """`python -m unicargo_medallion_data_pipeline_spark --environment dev ...` runs the
     pipeline end-to-end in a fresh interpreter (the spark-submit shape),
-    mirroring the reference's argparse param chain."""
+    mirroring the reference's argparse param chain.  The interpreter runs
+    in a non-UTC local zone, so a naive timestamp handed to Spark would
+    land in the run log shifted by that zone's offset."""
+    import datetime as dt
     import json
     import os
     import subprocess
@@ -98,7 +102,10 @@ def test_cli_runs_medallion_on_fixture_csvs(flight_fixture_dir):
 
     wh = tempfile.mkdtemp(prefix="cli_wh_")
     logp = os.path.join(tempfile.mkdtemp(prefix="cli_log_"), "task_log")
-    env = dict(os.environ, UNICARGO_SPARK_PIPELINE_ID="env_chain_pipeline")
+    env = dict(
+        os.environ, UNICARGO_SPARK_PIPELINE_ID="env_chain_pipeline", TZ="America/New_York"
+    )
+    before = dt.datetime.now(dt.timezone.utc).timestamp()
     proc = subprocess.run(
         [
             sys.executable, "-m", "unicargo_medallion_data_pipeline_spark",
@@ -124,6 +131,9 @@ def test_cli_runs_medallion_on_fixture_csvs(flight_fixture_dir):
     import glob
 
     assert glob.glob(logp + "/environment=dev/log_date=*/*.parquet")
+    # started_at is the run's true instant, whatever the writer's zone
+    started = spark.read.parquet(logp).select(F.unix_timestamp("started_at")).first()[0]
+    assert abs(started - before) < 600, (started, before)
 
 
 def test_run_tasks_parallel_entities_match_sequential(spark):
@@ -226,3 +236,49 @@ def test_run_tasks_parallel_failure_isolation(spark):
     recorded = {(r[3], r[4]) for r in log.rows}
     assert ("transform_p2", "FAILED") in recorded
     assert ("write_p0", "SUCCESS") in recorded
+
+
+def test_fan_out_keeps_order_and_failures_cancel_pending():
+    """fan_out returns results in item order at any width, and a
+    failing call re-raises and cancels the calls not yet started."""
+    import time
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.orchestrator import fan_out
+
+    for width in (1, 3, 16):
+        assert fan_out(lambda i: i * i, range(10), width) == [i * i for i in range(10)]
+
+    started = []
+
+    def fail_first(i):
+        started.append(i)
+        if i == 0:
+            raise ValueError("boom")
+        time.sleep(0.2)
+
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="boom"):
+        fan_out(fail_first, range(20), 2)
+    assert len(started) < 20
+    assert time.perf_counter() - t0 < 5
+
+
+def test_one_thread_pool_site_in_package():
+    """Driver-thread concurrency has one home: ThreadPoolExecutor is
+    constructed only in pipelines/orchestrator.py, so new concurrent
+    drivers build on fan_out instead of starting their own pool."""
+    import ast
+    import pathlib
+
+    import unicargo_medallion_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name == "ThreadPoolExecutor":
+                    sites.add(path.relative_to(root).as_posix())
+    assert sites == {"pipelines/orchestrator.py"}

@@ -279,28 +279,23 @@ def test_ivf_scores_equal_exact_rescore(spark):
         assert exact[(r["qid"], r["vid"])] == r["cosine_sim"], (r["qid"], r["vid"])
 
 
-def test_ivf_fit_path_valid_topk(spark):
-    """The per-run k-means IVF path (ivf_codebook fit + Arrow-batched
-    assignment) — no longer what the catalog query serves, which runs the
-    frozen codebook — must still produce ranked output whose every score
-    equals the exact quantized cosine for that pair."""
+def test_ivf_codebook_fit_is_seeded(spark):
+    """The k-means fit behind the frozen IVF codebook (``ivf_codebook``,
+    which ``ivf_frozen._refreeze`` reruns): n_centroids finite centroids
+    of the embedding's dimension, and the same centroids again for the
+    same seed."""
+    import math
+
     from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
     from unicargo_medallion_data_pipeline_spark.textops import similarity as sim
 
     e = load_table(spark, SF, "embeddings")
-    exact = {
-        (r["qid"], r["vid"]): r["cosine_sim"]
-        for r in sim.cosine_topk_exact(
-            e.filter(F.col("vec_id") < 10), e, k=10**9
-        ).collect()
-    }
-    out = sim.cosine_topk_ivf(
-        e.filter(F.col("vec_id") < 10), e, k=5, n_centroids=8, n_probe=2
-    ).collect()
-    assert out, "fit-path IVF returned nothing"
-    for r in out:
-        assert 1 <= r["sim_rank"] <= 5
-        assert exact[(r["qid"], r["vid"])] == r["cosine_sim"], (r["qid"], r["vid"])
+    dim = len(e.first()["embedding"])
+    cents = sim.ivf_codebook(e, n_centroids=8, seed=42)
+    assert len(cents) == 8
+    assert all(len(c) == dim for c in cents)
+    assert all(math.isfinite(v) for c in cents for v in c)
+    assert sim.ivf_codebook(e, n_centroids=8, seed=42) == cents
 
 
 def test_ivf_frozen_assignment_matches_numpy(spark):

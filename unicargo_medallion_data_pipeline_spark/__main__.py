@@ -114,7 +114,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     run_log = RunLog(args.pipeline_id, args.run_id, args.environment)
-    started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    started = dt.datetime.now(dt.timezone.utc)
     t0 = time.perf_counter()
     status, err, summary = "SUCCESS", None, {}
     try:

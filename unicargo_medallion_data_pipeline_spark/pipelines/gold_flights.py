@@ -596,7 +596,8 @@ def rolling_on_time_performance_from_grain(grain: DataFrame, dim_date: DataFrame
 
 
 #: name → (builder over the shared grain, which dims it needs).  The
-#: medallion driver uses these when a shared grain is available; the
+#: dim keys are ``dd`` (dates), ``da`` (airlines) and ``dp`` (airports).
+#: The medallion driver uses these when a shared grain is available; the
 #: direct fact builders in GOLD_SUITE remain the semantic definition
 #: (and the equality oracle for the pinned test).
 GRAIN_SUITE = {
@@ -626,27 +627,40 @@ def top_routes_from_traffic(traffic: DataFrame, k: int) -> DataFrame:
     ).limit(k)
 
 
-#: The full gold suite, name → builder; mirrors the reference's 15 gold
-#: tables (plus route helpers).  pipelines/medallion.py materializes these.
+#: name → builder over the shared ``route_traffic`` frame; the
+#: medallion driver uses these when several route tables share one
+#: route aggregation.
+ROUTE_SUITE = {
+    "route_traffic": lambda traffic: traffic,
+    "top_routes": lambda traffic: top_routes_from_traffic(traffic, 10),
+    "significant_routes": significant_routes_from_traffic,
+    "busiest_routes": lambda traffic: top_routes_from_traffic(traffic, 50),
+}
+
+
+#: The full gold suite, name → (direct builder over the fact, which dims
+#: it needs, as in GRAIN_SUITE); mirrors the reference's 15 gold tables
+#: (plus route helpers).  pipelines/medallion.py materializes these, and
+#: this table is the one place each gold table's inputs are declared.
 GOLD_SUITE = {
-    "route_traffic": route_traffic,
-    "top_routes": top_routes,
-    "airline_operational_summary": airline_operational_summary,
-    "daily_flight_summary": daily_flight_summary,
-    "weekly_flight_summary": weekly_flight_summary,
-    "monthly_flight_trends": monthly_flight_trends,
-    "airline_scorecard": airline_scorecard,
-    "airline_day_of_week": airline_day_of_week,
-    "significant_routes": significant_routes,
-    "busiest_routes": busiest_routes,
-    "airport_traffic": airport_traffic,
-    "seasonal_flight_summary": seasonal_flight_summary,
-    "weekend_weekday_split": weekend_weekday_split,
-    "quarterly_flight_summary": quarterly_flight_summary,
-    "delay_distribution": delay_distribution,
-    "flight_efficiency": flight_efficiency,
-    "aircraft_utilization": aircraft_utilization,
-    "rolling_on_time_performance": rolling_on_time_performance,
-    "flight_number_performance": flight_number_performance,
-    "distance_bucket_stats": distance_bucket_stats,
+    "route_traffic": (route_traffic, ("dp",)),
+    "top_routes": (top_routes, ("dp",)),
+    "airline_operational_summary": (airline_operational_summary, ("da",)),
+    "daily_flight_summary": (daily_flight_summary, ("dd", "da")),
+    "weekly_flight_summary": (weekly_flight_summary, ("dd", "da")),
+    "monthly_flight_trends": (monthly_flight_trends, ("dd", "da")),
+    "airline_scorecard": (airline_scorecard, ("da",)),
+    "airline_day_of_week": (airline_day_of_week, ("dd", "da")),
+    "significant_routes": (significant_routes, ("dp",)),
+    "busiest_routes": (busiest_routes, ("dp",)),
+    "airport_traffic": (airport_traffic, ("dp",)),
+    "seasonal_flight_summary": (seasonal_flight_summary, ("dd",)),
+    "weekend_weekday_split": (weekend_weekday_split, ("dd", "da")),
+    "quarterly_flight_summary": (quarterly_flight_summary, ("dd", "da")),
+    "delay_distribution": (delay_distribution, ()),
+    "flight_efficiency": (flight_efficiency, ("da",)),
+    "aircraft_utilization": (aircraft_utilization, ("dd", "da")),
+    "rolling_on_time_performance": (rolling_on_time_performance, ("dd", "da")),
+    "flight_number_performance": (flight_number_performance, ("da",)),
+    "distance_bucket_stats": (distance_bucket_stats, ()),
 }

@@ -8,7 +8,8 @@ per-table correctness checks possible.
 
 Within a layer the writes are independent (distinct target tables over
 read-only inputs).  Bronze ingests its entities and gold writes its
-suite concurrently from driver threads, both through ``_fan_out``: at
+suite concurrently from driver threads, both through
+``orchestrator.fan_out``, the package's one driver-thread pool: at
 pipeline scale each write is a few small Spark jobs that leave most
 cores idle, so overlapping them hides per-job scheduling and catalog
 latency.  Bronze's calls into ``save_to_table`` and ``promote_table``
@@ -24,7 +25,6 @@ from __future__ import annotations
 
 import logging
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +33,7 @@ from unicargo_medallion_data_pipeline_spark.config.tables import get_table_confi
 from unicargo_medallion_data_pipeline_spark.operators.cleaning import scrub_nonfinite
 from unicargo_medallion_data_pipeline_spark.operators.transforms import with_metadata, with_processed_timestamp
 from unicargo_medallion_data_pipeline_spark.pipelines import gold_flights, silver
+from unicargo_medallion_data_pipeline_spark.pipelines.orchestrator import fan_out
 from unicargo_medallion_data_pipeline_spark.quality.validation import validate_data_quality
 from unicargo_medallion_data_pipeline_spark.schemas.flights import (
     AIRLINES_SCHEMA,
@@ -41,7 +42,6 @@ from unicargo_medallion_data_pipeline_spark.schemas.flights import (
 )
 from unicargo_medallion_data_pipeline_spark.sources.readers import (
     csv_line_census,
-    read_csv,
     read_csv_with_quarantine,
 )
 from unicargo_medallion_data_pipeline_spark.sources.writers import (
@@ -69,40 +69,23 @@ class MedallionResult:
     quality: dict[str, dict] = field(default_factory=dict)
 
 
-def _fan_out(fn, items, width: int) -> list:
-    """``[fn(x) for x in items]`` with up to ``width`` calls in flight
-    from driver threads, submitted in item order.  ``width`` <= 1 runs
-    serially in the calling thread.  On a failure, ``Executor.map``
-    cancels the calls not yet started, and the ``with`` block re-raises
-    only once the running calls have returned, so each call's own
-    cleanup has run."""
-    items = list(items)
-    if width <= 1 or len(items) <= 1:
-        return [fn(x) for x in items]
-    with ThreadPoolExecutor(max_workers=min(width, len(items))) as ex:
-        return list(ex.map(fn, items))
-
-
 def run_bronze(
     spark: SparkSession,
     csv_paths: dict[str, str],
     environment: str = "dev",
     config: dict | None = None,
     pipeline_id: str = "medallion",
-    quarantine: bool = True,
 ) -> dict[str, DataFrame]:
     """Bronze ingest (S1 + P12 + S5): explicit-schema CSV scans enriched
     with metadata + processed_timestamp, written per entity.
 
-    ``quarantine`` (default) ingests through
-    ``read_csv_with_quarantine``: malformed source lines land verbatim
-    in a ``<table>_quarantine`` side table instead of flowing downstream
-    as silently-nulled cells, and a row-conservation gate (good +
-    quarantined == raw data lines) raises if the split ever loses or
-    fabricates rows.  ``quarantine=False`` keeps the reference's
-    PERMISSIVE single-table behavior.
+    Every entity ingests through ``read_csv_with_quarantine``: malformed
+    source lines land verbatim in a ``<table>_quarantine`` side table
+    instead of flowing downstream as silently-nulled cells, and a
+    row-conservation gate (good + quarantined == raw data lines) raises
+    if the split ever loses or fabricates rows.
 
-    The entities ingest concurrently (``_fan_out``, width = entity
+    The entities ingest concurrently (``fan_out``, width = entity
     count): their census scans and parses overlap, while their staged
     writes, conservation gates and promotes take turns under
     ``_WRITER_LOCK``.  Each entity keeps its own staging cleanup, so an
@@ -123,16 +106,6 @@ def run_bronze(
         path = csv_paths[entity]
         cfg = get_table_config(entity, "bronze", environment, config)
         meta = {"pipeline_id": pipeline_id, "entity": entity, "layer": "bronze"}
-        if not quarantine:
-            df = with_metadata(
-                with_processed_timestamp(
-                    scrub_nonfinite(read_csv(spark, path, schemas[entity]))
-                ),
-                meta,
-            )
-            with _WRITER_LOCK:
-                save_to_table(df, cfg, spark, mode="overwrite")
-            return spark.read.table(cfg.full_name)
         # Row conservation: every raw data line is either typed or
         # quarantined (raw data lines as counted by csv_line_census).
         # The good/bad counts ride the two table writes as observe()
@@ -201,7 +174,7 @@ def run_bronze(
         return spark.read.table(cfg.full_name)
 
     entities = list(csv_paths)
-    return dict(zip(entities, _fan_out(ingest, entities, len(entities))))
+    return dict(zip(entities, fan_out(ingest, entities, len(entities))))
 
 
 def run_medallion(
@@ -224,7 +197,7 @@ def run_medallion(
     starts; silver writes its four tables in turn; the quality gate
     runs before gold (see the module docstring).  ``gold_parallelism``
     > 1 submits that many independent gold tables concurrently from
-    driver threads — the supported Spark pattern for fan-out over a
+    driver threads (``fan_out``) — the supported Spark pattern for fan-out over a
     shared (cached) input.  Each gold table is a small aggregate whose
     single job underuses the cluster; overlapping them hides per-job
     scheduling + catalog latency.  Results are identical to the serial
@@ -322,44 +295,19 @@ def _build_gold_suite(
 ):
     import time as _time
 
-    needs = {
-        "route_traffic": (fact_t, dp_t),
-        "top_routes": (fact_t, dp_t),
-        "airline_operational_summary": (fact_t, da_t),
-        "daily_flight_summary": (fact_t, dd_t, da_t),
-        "weekly_flight_summary": (fact_t, dd_t, da_t),
-        "monthly_flight_trends": (fact_t, dd_t, da_t),
-        "airline_scorecard": (fact_t, da_t),
-        "airline_day_of_week": (fact_t, dd_t, da_t),
-        "significant_routes": (fact_t, dp_t),
-        "busiest_routes": (fact_t, dp_t),
-        "airport_traffic": (fact_t, dp_t),
-        "seasonal_flight_summary": (fact_t, dd_t),
-        "weekend_weekday_split": (fact_t, dd_t, da_t),
-        "quarterly_flight_summary": (fact_t, dd_t, da_t),
-        "delay_distribution": (fact_t,),
-        "flight_efficiency": (fact_t, da_t),
-        "aircraft_utilization": (fact_t, dd_t, da_t),
-        "rolling_on_time_performance": (fact_t, dd_t, da_t),
-        "flight_number_performance": (fact_t, da_t),
-        "distance_bucket_stats": (fact_t,),
-    }
     per_table: dict[str, float] = {}
-    names = gold_names or list(needs)
+    names = gold_names or list(gold_flights.GOLD_SUITE)
 
     # Shared-grain fan-in (round-10 verdict task 6): the eight
     # (date, airline)-family tables re-aggregate ONE cached partial
     # (~|dates|x|airlines| rows) instead of each re-scanning the 2M-row
-    # cached fact, and the three route tables share ONE route_traffic
+    # cached fact, and the ROUTE_SUITE tables share ONE route_traffic
     # aggregation (filter / top-k are route-level).  Lossless by
     # construction — integer partials; see the derivation section in
     # pipelines/gold_flights.py and the pinned bitwise-equality test.
-    dims = {"dd": dd_t, "da": da_t}
+    dims = {"dd": dd_t, "da": da_t, "dp": dp_t}
     grain_names = [n for n in names if n in gold_flights.GRAIN_SUITE]
-    route_names = [
-        n for n in names
-        if n in ("route_traffic", "top_routes", "significant_routes", "busiest_routes")
-    ]
+    route_names = [n for n in names if n in gold_flights.ROUTE_SUITE]
     grain = (
         gold_flights.build_date_airline_grain(fact_t).persist()
         if grain_names
@@ -385,17 +333,10 @@ def _build_gold_suite(
         if grain is not None and name in gold_flights.GRAIN_SUITE:
             fn, needed = gold_flights.GRAIN_SUITE[name]
             return fn(grain, *[dims[d] for d in needed])
-        if traffic is not None and name == "route_traffic":
-            return traffic
-        if traffic is not None and name == "top_routes":
-            # round-11 pipelines hunt: top_routes was missing from the
-            # shared-traffic family, re-paying the full route aggregation
-            return gold_flights.top_routes_from_traffic(traffic, 10)
-        if traffic is not None and name == "significant_routes":
-            return gold_flights.significant_routes_from_traffic(traffic)
-        if traffic is not None and name == "busiest_routes":
-            return gold_flights.top_routes_from_traffic(traffic, 50)
-        return gold_flights.GOLD_SUITE[name](*needs[name])
+        if traffic is not None and name in gold_flights.ROUTE_SUITE:
+            return gold_flights.ROUTE_SUITE[name](traffic)
+        fn, needed = gold_flights.GOLD_SUITE[name]
+        return fn(fact_t, *[dims[d] for d in needed])
 
     def _write_one(name: str) -> tuple[str, str, float]:
         df = _build_df(name)
@@ -405,7 +346,7 @@ def _build_gold_suite(
         return name, full_name, _time.perf_counter() - _tg
 
     try:
-        outcomes = _fan_out(_write_one, names, gold_parallelism)
+        outcomes = fan_out(_write_one, names, gold_parallelism)
     finally:
         if grain is not None:
             grain.unpersist()

@@ -13,6 +13,10 @@ Spark job (``write_to_table_utils.py:99-140``) — a 1-row shuffle-free
 write per task, but still a full Spark job each (job-launch overhead ×
 tasks).  This engine buffers log rows in the driver and flushes them as
 ONE partitioned write per pipeline run.
+
+``fan_out`` is the package's one driver-thread pool: ``run_tasks``
+runs its entity chains through it, and the medallion driver its bronze
+entities and gold tables.
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from unicargo_medallion_data_pipeline_spark.sources.writers import write_partitioned_path
 
 log = logging.getLogger(__name__)
 
@@ -114,13 +120,24 @@ class RunLog:
         if not self.rows:
             return
         df = spark.createDataFrame(self.rows, TASK_LOG_SCHEMA)
-        (
-            df.coalesce(1)
-            .write.mode("append")
-            .partitionBy("environment", "log_date")
-            .parquet(path)
+        write_partitioned_path(
+            df.coalesce(1), path, ["environment", "log_date"], mode="append", file_format="parquet"
         )
         self.rows.clear()
+
+
+def fan_out(fn, items, width: int) -> list:
+    """``[fn(x) for x in items]`` with up to ``width`` calls in flight
+    from driver threads, submitted in item order.  ``width`` <= 1 runs
+    serially in the calling thread.  On a failure, ``Executor.map``
+    cancels the calls not yet started, and the ``with`` block re-raises
+    only once the running calls have returned, so each call's own
+    cleanup has run."""
+    items = list(items)
+    if width <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    with ThreadPoolExecutor(max_workers=min(width, len(items))) as ex:
+        return list(ex.map(fn, items))
 
 
 @dataclass
@@ -180,13 +197,15 @@ def run_tasks(
     remaining tasks, but other entities continue
     (``bronze_orchestrator.py:216-217``).
 
-    ``max_workers > 1`` runs INDEPENDENT entity chains concurrently
-    (order within an entity is always preserved) — the scale upgrade
-    over the reference's strictly sequential loop: with N source
-    entities, N read/write jobs overlap in the Spark scheduler, hiding
-    scan/commit latency behind compute.  Spark job submission is
-    thread-safe; on a shared cluster pair this with a FAIR scheduler
-    pool per entity so one entity's large scan cannot starve the rest.
+    The entity chains run through ``fan_out(..., max_workers)``:
+    ``max_workers > 1`` runs INDEPENDENT chains concurrently (order
+    within an entity is always preserved) — the scale upgrade over the
+    reference's strictly sequential loop: with N source entities, N
+    read/write jobs overlap in the Spark scheduler, hiding scan/commit
+    latency behind compute.  Spark job submission is thread-safe; on a
+    shared cluster pair this with a FAIR scheduler pool per entity so
+    one entity's large scan cannot starve the rest.  A chain catches its
+    own task errors, so one failing entity never cancels another.
     Results and statuses are merged in first-appearance entity order, so
     the output is deterministic regardless of completion order.
     """
@@ -196,20 +215,12 @@ def run_tasks(
         chains.setdefault(task.entity, []).append(task)
 
     out = RunResult()
-    if max_workers <= 1 or len(chains) <= 1:
-        chain_results = {
-            entity: _run_entity_chain(entity, chain, run_log)
-            for entity, chain in chains.items()
-        }
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            futures = {
-                entity: pool.submit(_run_entity_chain, entity, chain, run_log)
-                for entity, chain in chains.items()
-            }
-            chain_results = {entity: fut.result() for entity, fut in futures.items()}
-
-    for entity, (last_df, failed, failures, statuses) in chain_results.items():
+    chain_results = fan_out(
+        lambda entity: _run_entity_chain(entity, chains[entity], run_log),
+        chains,
+        max_workers,
+    )
+    for entity, (last_df, failed, failures, statuses) in zip(chains, chain_results):
         # No partial data: a caller iterating results must never see a
         # failed entity's stale intermediate DataFrame (e.g. the read
         # output after its transform failed).

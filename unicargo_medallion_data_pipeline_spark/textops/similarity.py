@@ -85,7 +85,7 @@ def cosine_topk_exact(
 
     queries = guard_all_pairs(
         queries, "cosine_topk_exact",
-        "cosine_topk_lsh (embedding_knn_lsh) or cosine_topk_ivf (embedding_knn_ivf)",
+        "cosine_topk_lsh (embedding_knn_lsh) or cosine_topk_ivf_frozen (embedding_knn_ivf)",
     )
     q = queries.select(
         F.col(id_col).alias("qid"), quantized(F.col(vec_col)).alias("q_emb")
@@ -252,9 +252,9 @@ def ivf_codebook(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    # greatest(…, 1e-30): the same zero-norm guard _ivf_assign applies
-    # with np.maximum — one all-zero embedding must not ANSI-crash the
-    # codebook build (it normalizes to the zero vector instead).
+    # greatest(…, 1e-30): the zero-norm guard the cosine paths apply —
+    # one all-zero embedding must not ANSI-crash the codebook build (it
+    # normalizes to the zero vector instead).
     norm = F.greatest(
         F.sqrt(
             F.aggregate(
@@ -272,76 +272,6 @@ def ivf_codebook(
     )
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(normalized)
     return [list(map(float, c)) for c in model.clusterCenters()]
-
-
-def _ivf_assign(centroids: list[list[float]], n_probe: int):
-    """Vectorized (Arrow-batched) centroid assignment: top-``n_probe``
-    centroid ids per vector by cosine.  One numpy matmul per batch — the
-    sanctioned pandas_udf escape hatch (no built-in argmin-over-matrix)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-
-    def assign(vecs):
-        M = np.stack(vecs.to_numpy())
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-        sims = M @ C.T
-        # stable: ties (e.g. a zero embedding scoring 0.0 to every
-        # centroid) must break toward the LOWER cid, matching the frozen
-        # path's documented (-score, cid) order — default introsort
-        # would leave tied probe sets numpy-version-dependent
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    # Real class objects, not strings: this module's `from __future__
-    # import annotations` would otherwise leave hints pandas_udf's
-    # signature inference cannot resolve.
-    assign.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(assign, "array<int>")
-
-
-def cosine_topk_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k: corpus vectors live in their nearest-centroid cell;
-    each query probes its ``n_probe`` nearest cells and rescores exactly.
-
-    The companion scale path to ``cosine_topk_lsh``: candidates come from
-    an equi-join on the cell id (one shuffle; cell population ≈ n/k, skew
-    handled by AQE), never a cross product.  Recall is tuned by n_probe
-    (fraction of corpus scanned ≈ n_probe/n_centroids) — on clustered
-    real-world embeddings a small n_probe recovers most neighbours; on
-    unstructured data it degrades gracefully toward that fraction.
-    """
-    centroids = ivf_codebook(corpus, n_centroids, vec_col)
-    corpus_cells = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("vid"),
-        quantized(F.col(vec_col)).alias("c_emb"),
-        F.element_at(_ivf_assign(centroids, 1)(F.col(vec_col)), 1).alias("cell"),
-    )
-    query_cells = queries.select(
-        F.col(id_col).alias("qid"),
-        quantized(F.col(vec_col)).alias("q_emb"),
-        F.explode_outer(_ivf_assign(centroids, n_probe)(F.col(vec_col))).alias("cell"),
-    )
-    pairs = query_cells.join(corpus_cells, "cell").filter(F.col("qid") != F.col("vid"))
-    scored = pairs.select(
-        "qid", "vid", cosine_q(F.col("q_emb"), F.col("c_emb")).alias("cosine_sim")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine_sim").desc(), F.col("vid").asc())
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= k)
-    )
 
 
 def cosine_topk_lsh(
@@ -474,13 +404,12 @@ def cosine_topk_ivf_frozen(
 ) -> DataFrame:
     """IVF ANN top-k against the FROZEN codebook (``textops.ivf_frozen``).
 
-    Same plan shape as ``cosine_topk_ivf`` — corpus vectors live in their
-    top-1 cell, queries probe their ``n_probe`` nearest cells, candidates
-    come from a cell-id equi-join, exact quantized rescoring — but cell
-    assignment is pure JVM integer arithmetic over centroid literals
-    instead of an Arrow-batched matmul against a per-run fitted model.
-    That is both the production serving shape (the codebook is fit
-    offline, on a sample at lake scale, then frozen) and what makes the
+    Corpus vectors live in their top-1 cell, queries probe their
+    ``n_probe`` nearest cells, candidates come from a cell-id equi-join,
+    and every candidate is rescored exactly; cell assignment is pure JVM
+    integer arithmetic over centroid literals.  That is both the
+    production serving shape (the codebook is fit offline by
+    ``ivf_codebook``, on a sample at lake scale, then frozen) and what makes the
     query fully value-oracle-checkable: an independent engine recomputes
     cells, candidates, scores, and ranks from the frozen literals.
     """
