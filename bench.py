@@ -267,23 +267,20 @@ def steady_single(
 
 
 def time_catalog(
-    spark, sf_dir: str, names, n_rounds: int = N_ROUNDS, before=None
+    spark, sf_dir: str, names, n_rounds: int = N_ROUNDS
 ) -> tuple[dict[str, float], dict]:
     """Time a full ``count()`` of each named catalog query at ``sf_dir``
     under the steady policy (``steady_time_queries``) after one warm-up
-    action, with ``before(name)`` (if given) run ahead of each attempt
-    but outside its timing.  The calibration block also records the
-    session's ``master`` / ``default_parallelism`` /
-    ``shuffle_partitions`` and ``$SPARK_GRAFT_CPUS``, so an artifact
-    shows which parallelism produced it."""
+    action.  The calibration block also records the session's
+    ``master`` / ``default_parallelism`` / ``shuffle_partitions`` and
+    ``$SPARK_GRAFT_CPUS``, so an artifact shows which parallelism
+    produced it."""
     from unicargo_medallion_data_pipeline_spark.plans.all import CATALOG
 
     # Warm up the JVM + parquet footer caches with a trivial action.
     spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
 
     def _attempt(name: str) -> float:
-        if before is not None:
-            before(name)
         t0 = time.perf_counter()
         CATALOG[name].fn(spark, sf_dir).count()
         return time.perf_counter() - t0

@@ -164,24 +164,21 @@ def test_trust_memo_invalidated_by_rewrite(spark):
     it rewrites, so the next read re-earns trust against the NEW table
     — and an untrusted (foreign) replacement written through the
     engine's own writer path still refuses."""
-    from unicargo_medallion_data_pipeline_spark.sources.writers import (
-        _TRUSTED_BUCKETED,
-    )
+    from unicargo_medallion_data_pipeline_spark.session import session_state
 
     df = spark.range(0, 200).select(
         (F.col("id") % 10).alias("k"), F.col("id").alias("v")
     )
     name = save_bucketed_table(df, spark, "bg_memo", "t", ["k"], 4)
-    # r16 ADVICE fix: keyed by the LIVE session in a WeakKeyDictionary
-    # (an id(spark) key could be inherited by a new session after id
-    # recycling, handing it a dead session's verdict).
-    assert name in _TRUSTED_BUCKETED.get(spark, set())  # write seeds the memo
+    # The verdicts live in the session's own state, so a new session
+    # never inherits a dead session's verdict.
+    assert name in session_state(spark).get("trusted_bucketed", set())  # write seeds the memo
     read_bucketed_table(spark, name)           # memo hit, still fine
-    assert name in _TRUSTED_BUCKETED.get(spark, set())
+    assert name in session_state(spark).get("trusted_bucketed", set())
 
     # A rewrite through the engine's writer drops the stale verdict
     # before the new write, and re-seeds it only after re-verification.
     save_bucketed_table(df, spark, "bg_memo", "t", ["k"], 8)
-    assert name in _TRUSTED_BUCKETED.get(spark, set())  # re-earned by the write
+    assert name in session_state(spark).get("trusted_bucketed", set())  # re-earned by the write
     out = read_bucketed_table(spark, name)
     assert out.count() == 200

@@ -73,14 +73,19 @@ def test_missing_table_falls_back_to_derivation(spark, tmp_path, monkeypatch):
 
 
 def test_universe_pin_cache_reuses_within_session(spark, monkeypatch):
-    """The session-keyed pin cache must serve the SAME checkpointed
-    frame for repeated (session, sf_dir) requests, and a consumer run
-    twice must return identical results."""
+    """The per-session pin memo must serve the SAME checkpointed frame
+    for repeated (session, sf_dir) requests, a consumer run twice must
+    return identical results, and a new session must not see it."""
     from unicargo_medallion_data_pipeline_spark.pipelines.canonical import CANONICAL_DIR_ENV
     from unicargo_medallion_data_pipeline_spark.plans import universes
+    from unicargo_medallion_data_pipeline_spark.session import session_state
 
     monkeypatch.delenv(CANONICAL_DIR_ENV, raising=False)
-    universes._UNIVERSE_CACHE.clear()
+    state = session_state(spark)
+    owned = {("universe", SF, t) for t in ("documents_canonical", "embeddings_canonical")}
+    for key in owned:
+        state.pop(key, None)
+    before = set(state)
     a = universes.docs_with_text(spark, SF)
     b = universes.docs_with_text(spark, SF)
     assert a is b  # cache hit: same pinned frame object
@@ -88,7 +93,7 @@ def test_universe_pin_cache_reuses_within_session(spark, monkeypatch):
     e2 = universes.embeddings_valid(spark, SF)
     assert e1 is e2
     assert a.count() > 0 and e1.count() > 0
-    # a different sf_dir must NOT hit the same entry
-    assert ("documents_canonical",) not in universes._UNIVERSE_CACHE
-    keys = list(universes._UNIVERSE_CACHE)
-    assert all(k[1] == SF for k in keys) and len(keys) == 2
+    # one entry per (sf_dir, universe): a different sf_dir cannot hit it
+    assert set(state) - before == owned
+    # a new session starts with its own, empty state
+    assert universes.docs_with_text(spark.newSession(), SF) is not a

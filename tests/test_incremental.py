@@ -18,11 +18,14 @@ def star(spark, flight_fixture_dir):
         AIRPORTS_SCHEMA,
         FLIGHTS_SCHEMA,
     )
-    from unicargo_medallion_data_pipeline_spark.sources.readers import read_csv
 
-    raw = read_csv(spark, os.path.join(flight_fixture_dir, "flights.csv"), FLIGHTS_SCHEMA)
-    airlines = read_csv(spark, os.path.join(flight_fixture_dir, "airlines.csv"), AIRLINES_SCHEMA)
-    airports = read_csv(spark, os.path.join(flight_fixture_dir, "airports.csv"), AIRPORTS_SCHEMA)
+    def read_csv(name, schema):
+        path = os.path.join(flight_fixture_dir, name)
+        return spark.read.schema(schema).option("header", "true").csv(path)
+
+    raw = read_csv("flights.csv", FLIGHTS_SCHEMA)
+    airlines = read_csv("airlines.csv", AIRLINES_SCHEMA)
+    airports = read_csv("airports.csv", AIRPORTS_SCHEMA)
     dim_airline = silver.build_dim_airline(airlines)
     dim_airport = silver.build_dim_airport(airports)
     dim_date = silver.build_dim_date(spark, "2015-01-01", "2015-12-31")

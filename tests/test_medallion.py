@@ -171,9 +171,10 @@ def test_fact_rerun_is_deterministic(spark, flight_fixture_dir, medallion):
     not)."""
     from unicargo_medallion_data_pipeline_spark.pipelines import silver
     from unicargo_medallion_data_pipeline_spark.schemas.flights import FLIGHTS_SCHEMA
-    from unicargo_medallion_data_pipeline_spark.sources.readers import read_csv
 
-    raw = read_csv(spark, os.path.join(flight_fixture_dir, "flights.csv"), FLIGHTS_SCHEMA)
+    raw = spark.read.schema(FLIGHTS_SCHEMA).option("header", "true").csv(
+        os.path.join(flight_fixture_dir, "flights.csv")
+    )
     clean = silver.clean_flights(raw)
     fact_existing = spark.read.table(medallion.silver["flights"])
     rebuilt_keys = {

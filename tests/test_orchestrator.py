@@ -263,22 +263,42 @@ def test_fan_out_keeps_order_and_failures_cancel_pending():
     assert time.perf_counter() - t0 < 5
 
 
-def test_one_thread_pool_site_in_package():
-    """Driver-thread concurrency has one home: ThreadPoolExecutor is
-    constructed only in pipelines/orchestrator.py, so new concurrent
-    drivers build on fan_out instead of starting their own pool."""
+def _package_calls():
+    """(module path relative to the package, called name, Call node) for
+    every call in the package source."""
     import ast
     import pathlib
 
     import unicargo_medallion_data_pipeline_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    sites = set()
     for path in root.rglob("*.py"):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Call):
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                if name == "ThreadPoolExecutor":
-                    sites.add(path.relative_to(root).as_posix())
+                yield path.relative_to(root).as_posix(), name, node
+
+
+def test_one_thread_pool_site_in_package():
+    """Driver-thread concurrency has one home: ThreadPoolExecutor is
+    constructed only in pipelines/orchestrator.py, so new concurrent
+    drivers build on fan_out instead of starting their own pool."""
+    sites = {path for path, name, _ in _package_calls() if name == "ThreadPoolExecutor"}
     assert sites == {"pipelines/orchestrator.py"}
+
+
+def test_session_state_is_the_only_session_keying():
+    """Per-session state has one home, session.session_state: no module
+    keys a memo by a session's id() (a recycled address hands a new
+    session a dead one's state) or builds its own WeakKeyDictionary."""
+    import ast
+
+    offenders = []
+    for path, name, node in _package_calls():
+        if name == "WeakKeyDictionary" or (
+            name == "id"
+            and any(isinstance(a, ast.Name) and a.id in ("spark", "session") for a in node.args)
+        ):
+            offenders.append((path, ast.unparse(node)))
+    assert not offenders, offenders

@@ -185,39 +185,55 @@ def test_cleaned_events_oracle_mirrors_nonfinite_scrub(spark, tmp_path):
     assert out[(2, 0)] == 0.0 and out[(3, 30)] == 0.0  # ±Inf scrubbed+filled
 
 
-def test_universe_cache_sweeps_dead_sessions(spark, tmp_path):
-    """r12 advice: one stale hit evicts EVERY dead-session entry, not
-    just the exact key — otherwise long runs spawning many sessions
-    accumulate unreachable (session, frame) pairs forever."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+_DEAD_SESSION_SCRIPT = r"""
+import gc, json, sys, weakref
+import pyarrow as pa
+import pyarrow.parquet as pq
+from unicargo_medallion_data_pipeline_spark.plans import universes
+from unicargo_medallion_data_pipeline_spark.session import get_spark, session_state
 
-    from unicargo_medallion_data_pipeline_spark.plans import universes
+sf_dir = sys.argv[1]
+pq.write_table(
+    pa.table({"doc_id": [1], "text": ["t"], "lang": ["en"],
+              "source": ["s"], "n_chars": [1]}),
+    sf_dir + "/documents.parquet",
+)
+a = get_spark("session-a", master="local[2]", shuffle_partitions=2)
+pinned = universes.docs_with_text(a, sf_dir)
+n_rows = pinned.count()
+a_ref, pinned_ref = weakref.ref(a), weakref.ref(pinned)
+a.stop()
+del a, pinned
+b = get_spark("session-b", master="local[2]", shuffle_partitions=2)
+gc.collect()
+print(json.dumps({
+    "n_rows": n_rows,
+    "a_dead": a_ref() is None,
+    "pinned_dead": pinned_ref() is None,
+    "b_state": sorted(map(repr, session_state(b))),
+}))
+b.stop()
+"""
 
-    pq.write_table(
-        pa.table({
-            "doc_id": [1], "text": ["t"], "lang": ["en"],
-            "source": ["s"], "n_chars": [1],
-        }),
-        os.path.join(tmp_path, "documents.parquet"),
+
+def test_stopped_session_state_is_collected(tmp_path):
+    """Per-session engine state lives on the SparkSession object, so a
+    stopped session and the universe it pinned are garbage once the next
+    session exists, and the new session starts with no state.  Runs in a
+    fresh interpreter: stopping the shared test session is not an option."""
+    import json
+    import subprocess
+    import sys
+
+    from unicargo_medallion_data_pipeline_spark.pipelines.canonical import CANONICAL_DIR_ENV
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env.pop(CANONICAL_DIR_ENV, None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _DEAD_SESSION_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=420, env=env, cwd=repo,
     )
-
-    class _DeadSession:  # sparkContext access raises → counts as stopped
-        @property
-        def sparkContext(self):
-            raise RuntimeError("stopped")
-
-    dead = _DeadSession()
-    universes.clear_universe_cache()
-    cache = universes._UNIVERSE_CACHE
-    # unrelated dead entries + a dead entry squatting on THIS lookup key
-    cache[(999991, "/x", "t1")] = (dead, None)
-    cache[(999992, "/y", "t2")] = (dead, None)
-    cache[(id(spark), str(tmp_path), "documents_canonical")] = (dead, None)
-    out = universes.docs_with_text(spark, str(tmp_path))
-    assert out.count() == 1
-    # the stale hit swept all three dead entries; only the fresh pin remains
-    assert list(cache) == [(id(spark), str(tmp_path), "documents_canonical")]
-    assert cache[(id(spark), str(tmp_path), "documents_canonical")][0] is spark
-    universes.clear_universe_cache()
-    assert not cache
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {"n_rows": 1, "a_dead": True, "pinned_dead": True, "b_state": []}

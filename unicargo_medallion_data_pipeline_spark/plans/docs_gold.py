@@ -12,14 +12,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unicargo_medallion_data_pipeline_spark.plans.catalog import CATALOG, register
-from unicargo_medallion_data_pipeline_spark.plans.universes import SQL_DOCS1 as _SQL_DOCS1
+from unicargo_medallion_data_pipeline_spark.plans.universes import (
+    SQL_DOCS1 as _SQL_DOCS1,
+    SQL_NORM as _NORM,
+    SQL_TOKS as _TOKS,
+)
 from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
 from unicargo_medallion_data_pipeline_spark.textops import analysis as ta
 from unicargo_medallion_data_pipeline_spark.textops.util import ensure_parallelism
 
 # DuckDB fragments mirroring textops/analysis.py
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
 _NTOK = f"len({_TOKS})"
 
 

@@ -16,13 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unicargo_medallion_data_pipeline_spark.plans.catalog import register
+from unicargo_medallion_data_pipeline_spark.plans.universes import (
+    SQL_NORM as _NORM,
+    SQL_TOKS as _TOKS,
+)
 from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
 from unicargo_medallion_data_pipeline_spark.textops import analysis as ta
 from unicargo_medallion_data_pipeline_spark.textops import pii
 from unicargo_medallion_data_pipeline_spark.textops.util import ensure_parallelism
-
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
 
 from unicargo_medallion_data_pipeline_spark.plans.similarity_gold import (  # noqa: E402
     _SQL_DOCS1,

@@ -28,12 +28,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from unicargo_medallion_data_pipeline_spark.plans.catalog import register
+from unicargo_medallion_data_pipeline_spark.plans.universes import (
+    SQL_NORM as _NORM,
+    SQL_TOKS as _TOKS,
+)
 from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
 from unicargo_medallion_data_pipeline_spark.textops import analysis as ta
 
-# DuckDB fragments mirroring textops/analysis.py (same as docs_gold.py)
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
+# DuckDB fragment mirroring textops/analysis.py
 _FP = f"md5({_NORM})"
 
 # 60-bit integer from an md5 prefix — exact in both engines' int64

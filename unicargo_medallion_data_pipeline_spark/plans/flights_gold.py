@@ -48,42 +48,26 @@ from unicargo_medallion_data_pipeline_spark.pipelines.silver import (
     clean_flights,
 )
 from unicargo_medallion_data_pipeline_spark.plans.catalog import register
+from unicargo_medallion_data_pipeline_spark.session import session_state
 from unicargo_medallion_data_pipeline_spark.sources.flights_fixture import (
     FIXTURE_DIR,
     ensure_flights_fixture,
 )
 
 
-# Session-keyed silver cache: the medallion contract materializes
-# silver ONCE and serves every gold query from it — rebuilding the
-# star per query was a bench/correctness-harness artifact (r5 verdict).
-# Frames are pinned with an eager localCheckpoint so reuse hits
-# materialized blocks, not a shared lazy DAG; blocks are freed by the
-# ContextCleaner when the session drops.
-_SILVER_CACHE: dict[int, tuple] = {}
-
-
 def _silver(spark: SparkSession):
     """Fixture parquet → silver star schema (the real pipeline path),
     built once per session.
 
-    The memo is revalidated like the catalog's other session caches
-    (_BUCKETED_STATE rechecks the catalog, _BLOOM_TABLE_STATE the
-    manifest dir): the entry pins the session OBJECT and checks its
-    context is still alive — keyed on id(spark) alone, a stopped+GC'd
-    session whose address a new one reuses would serve frames and
-    checkpoint blocks belonging to a dead SparkContext."""
-    key = id(spark)
-    hit = _SILVER_CACHE.get(key)
-    if hit is not None:
-        cached_spark, frames = hit
-        try:
-            alive = cached_spark is spark and not spark.sparkContext._jsc.sc().isStopped()
-        except Exception:  # noqa: BLE001 — dead gateway counts as stopped
-            alive = False
-        if alive:
-            return frames
-        del _SILVER_CACHE[key]
+    The medallion contract materializes silver ONCE and serves every
+    gold query from it — rebuilding the star per query was a
+    bench/correctness-harness artifact (r5 verdict).  Frames are pinned
+    with an eager localCheckpoint so reuse hits materialized blocks, not
+    a shared lazy DAG, and memoized in ``session_state(spark)``, so they
+    die with their session."""
+    state = session_state(spark)
+    if "flights_silver" in state:
+        return state["flights_silver"]
     paths = ensure_flights_fixture()
     dim_airline = build_dim_airline(
         spark.read.parquet(paths["airlines"])
@@ -100,9 +84,8 @@ def _silver(spark: SparkSession):
         dim_airline,
         dim_airport,
     ).localCheckpoint(eager=True)
-    out = (fact, dim_airline, dim_airport, dim_date)
-    _SILVER_CACHE[key] = (spark, out)
-    return out
+    state["flights_silver"] = (fact, dim_airline, dim_airport, dim_date)
+    return state["flights_silver"]
 
 
 # Shared oracle prelude re-deriving the silver model in DuckDB SQL.

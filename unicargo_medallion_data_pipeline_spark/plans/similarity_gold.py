@@ -42,8 +42,6 @@ from unicargo_medallion_data_pipeline_spark.textops.analysis import tokens
 from unicargo_medallion_data_pipeline_spark.textops.util import ensure_parallelism
 from unicargo_medallion_data_pipeline_spark.textops.winnow import winnow_overlap_pairs
 
-_SQL_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-_SQL_TOKSET = f"list_distinct(string_split({_SQL_NORM}, ' '))"
 _QI = "CAST(floor(CAST({v} AS DOUBLE) * 100000000) AS BIGINT)"
 
 #: Hygiene + identity contracts of the dedup/similarity families —
@@ -56,10 +54,14 @@ from unicargo_medallion_data_pipeline_spark.plans.universes import (  # noqa: E4
     SQL_DOCS1 as _SQL_DOCS1,
     SQL_EMB1 as _SQL_EMB1,
     SQL_HAS_TEXT as _SQL_HAS_TEXT,
+    SQL_NORM as _SQL_NORM,
+    SQL_TOKS,
     SQL_VALID_EMB as _SQL_VALID_EMB,
     docs_with_text as _docs_with_text,
     embeddings_valid as _embeddings_valid,
 )
+
+_SQL_TOKSET = f"list_distinct({SQL_TOKS})"
 
 
 #: Shared all-pairs token-Jaccard oracle (threshold 0.8): ONE text for

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unicargo_medallion_data_pipeline_spark.plans.catalog import register
+from unicargo_medallion_data_pipeline_spark.session import session_state
 from unicargo_medallion_data_pipeline_spark.sources.readers import load_table
 from unicargo_medallion_data_pipeline_spark.sources.staging import scratch_dir
 
@@ -380,10 +381,6 @@ def events_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Deterministic probe cohort for the bloom lookup.
 _BLOOM_USERS = (7, 70, 123)
 
-#: (session, sf_dir) → path of the bloom-equipped committed table
-#: (write once, certify the pruned read; see the query docstring).
-_BLOOM_TABLE_STATE: dict[tuple[int, str], str] = {}
-
 
 @register(
     "events_bloom_pruned_lookup",
@@ -422,11 +419,12 @@ def events_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The bloom-equipped commit is the table's WRITE path (paid once per
     # table version in production); this query certifies the pruned READ
-    # path.  Memoize the committed table per (session, sf_dir) so
+    # path.  Memoize the committed table's path per (session, sf_dir) so
     # repeated calls measure the read, not a re-ingest — the on-disk
     # manifest is re-verified before reuse.
-    key = (id(spark), sf_dir)
-    path = _BLOOM_TABLE_STATE.get(key)
+    state = session_state(spark)
+    key = ("bloom_table", sf_dir)
+    path = state.get(key)
     if path is None or not os.path.isdir(os.path.join(path, "_manifests")):
         ev = load_table(spark, sf_dir, "events").select(
             "user_id", "event_type", "value"
@@ -434,7 +432,7 @@ def events_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = os.path.join(scratch_dir("bloom_q_"), "t")
         t = ManifestTable(spark, path)
         t.commit(ev.repartitionByRange(8, "user_id"), bloom_cols=["user_id"])
-        _BLOOM_TABLE_STATE[key] = path
+        state[key] = path
     else:
         t = ManifestTable(spark, path)
     hits = t.read_bloom_pruned("user_id", list(_BLOOM_USERS))

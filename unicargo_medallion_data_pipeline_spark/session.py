@@ -56,6 +56,19 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def session_state(spark: SparkSession) -> dict:
+    """The engine's per-session memo dict (pinned universes, the flights
+    silver star, write-once table state, bucket trust verdicts).
+
+    Held on the ``SparkSession`` object itself, so it lives exactly as
+    long as that object: a new session (``getOrCreate`` after ``stop``,
+    or ``newSession()``) starts empty, and a stopped session's state is
+    collected with it.  Nothing is keyed by ``id()``, so a recycled
+    address can never hand one session another's state.  Callers own
+    their keys and keep their own validity checks."""
+    return vars(spark).setdefault("_engine_state", {})
+
+
 def get_spark(
     app_name: str = "unicargo-medallion-spark",
     master: str | None = None,

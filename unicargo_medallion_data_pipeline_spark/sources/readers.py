@@ -34,11 +34,6 @@ TESTDATA_TABLES = (
 )
 
 
-def read_csv(spark: SparkSession, path: str, schema: StructType, header: bool = True) -> DataFrame:
-    """S1 — CSV scan with a fixed, explicit schema (no inference pass)."""
-    return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
 def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     """S3 — columnar path scan; schema optional (parquet is self-describing)."""
     reader = spark.read
@@ -79,7 +74,7 @@ def read_csv_with_quarantine(
 ) -> tuple[DataFrame, DataFrame]:
     """S1 hardened for production ingest: ``(good, quarantine)`` split.
 
-    ``read_csv``'s PERMISSIVE default silently nulls malformed cells —
+    A plain PERMISSIVE CSV read silently nulls malformed cells —
     at lake scale that quietly corrupts downstream aggregates, while
     FAILFAST turns one bad upstream line into a dead pipeline and
     DROPMALFORMED loses the evidence.  The quarantine pattern keeps all

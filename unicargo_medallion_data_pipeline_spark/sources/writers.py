@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unicargo_medallion_data_pipeline_spark.config.tables import TableConfig
+from unicargo_medallion_data_pipeline_spark.session import session_state
 
 
 def delta_available() -> bool:
@@ -231,21 +232,14 @@ class BucketLayoutError(RuntimeError):
     write this engine never verified)."""
 
 
-#: session → {table names} read_bucketed_table has proven trustworthy
-#: (engine stamp or on-disk layout).  Keyed by the LIVE SparkSession
-#: object in a WeakKeyDictionary, not ``id(spark)`` (r15 ADVICE:
-#: CPython recycles ids after a stopped session is garbage-collected,
-#: so an id-keyed memo could hand a NEW session a dead session's
-#: verdict — and the dict grew unboundedly).  A weak key cannot be
-#: inherited (the entry dies with the session) and cannot leak.  Only
-#: positive verdicts are stored; save_bucketed_table invalidates the
-#: name it rewrites.  A fresh Python wrapper of the same JVM session
-#: misses the memo and simply re-verifies — the safe direction.
-import weakref as _weakref
-
-_TRUSTED_BUCKETED: "_weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
-    _weakref.WeakKeyDictionary()
-)
+def _trusted_bucketed(spark: SparkSession) -> set[str]:
+    """Table names read_bucketed_table has proven trustworthy in this
+    session (engine stamp or on-disk layout), held in
+    ``session_state(spark)`` so the verdicts die with the session.  Only
+    positive verdicts are stored; save_bucketed_table invalidates the
+    name it rewrites.  A fresh Python wrapper of the same JVM session
+    starts with no verdicts and simply re-verifies — the safe direction."""
+    return session_state(spark).setdefault("trusted_bucketed", set())
 
 
 def read_bucketed_table(
@@ -281,7 +275,7 @@ def read_bucketed_table(
     same exposure the catalog itself has between plan and execution).
     Refusals and degraded reads are never memoized.
     """
-    if name in _TRUSTED_BUCKETED.get(spark, ()):
+    if name in _trusted_bucketed(spark):
         return spark.table(name)
     cat = spark.catalog
     try:
@@ -296,7 +290,7 @@ def read_bucketed_table(
     if props.get(ONE_FILE_PER_BUCKET_PROP) == "true" or verify_one_file_per_bucket(
         spark, name
     ):
-        _TRUSTED_BUCKETED.setdefault(spark, set()).add(name)
+        _trusted_bucketed(spark).add(name)
         return spark.table(name)
     if on_violation == "degrade":
         # Path scan: same data, no bucketing/sort metadata → the
@@ -344,7 +338,7 @@ def save_bucketed_table(
     name = f"{database}.{table}"
     # Any (re)write invalidates a previously memoized trust verdict —
     # the new layout must re-earn it through read_bucketed_table.
-    _TRUSTED_BUCKETED.get(spark, set()).discard(name)
+    _trusted_bucketed(spark).discard(name)
     if mode == "overwrite":
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         import shutil
@@ -387,5 +381,5 @@ def save_bucketed_table(
     # The write just verified the layout it produced — seed the read
     # guard's memo so the first read skips the redundant catalog round
     # trips (same trust as the stamp itself).
-    _TRUSTED_BUCKETED.setdefault(spark, set()).add(name)
+    _trusted_bucketed(spark).add(name)
     return name
