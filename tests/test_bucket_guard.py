@@ -7,8 +7,8 @@ bucket split across files makes the scan-claimed ordering FALSE — an
 SMJ that trusts it returns wrong rows, not a slow plan.  The guard
 scopes the trust: ``save_bucketed_table`` verifies one-file-per-bucket
 on disk and stamps ``spark_graft.one_file_per_bucket``;
-``read_bucketed_table`` refuses (or degrades to a path scan) for any
-bucketed table without a verifiable layout.
+``read_bucketed_table`` refuses any bucketed table without a verifiable
+layout.
 """
 
 from __future__ import annotations
@@ -67,33 +67,6 @@ def test_foreign_multifile_bucketed_table_refuses(spark):
     assert not verify_one_file_per_bucket(spark, name)
     with pytest.raises(BucketLayoutError):
         read_bucketed_table(spark, name)
-
-
-def test_foreign_multifile_bucketed_table_degrades_correctly(spark):
-    """degrade = path scan: the planner re-shuffles and re-sorts, so
-    the join is slower but RIGHT.  The degraded plan must carry its own
-    Exchange (proof the bucket metadata was dropped) and produce the
-    true join cardinality."""
-    import contextlib
-    import io
-
-    name = _foreign_multifile_bucketed(spark, "guard_db", "bad_deg_b")
-    left = read_bucketed_table(spark, name, on_violation="degrade")
-    assert left.count() == 400
-    probe = spark.range(0, 100).select(F.col("id").alias("k"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = left.join(probe, "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" in plan, "degraded read must not claim bucketing"
-        # every k in 0..99 appears 4x on the left
-        assert joined.count() == 400
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_spark_itself_resorts_multifile_buckets(spark):

@@ -263,9 +263,9 @@ def test_fan_out_keeps_order_and_failures_cancel_pending():
     assert time.perf_counter() - t0 < 5
 
 
-def _package_calls():
-    """(module path relative to the package, called name, Call node) for
-    every call in the package source."""
+def _package_nodes():
+    """(module path relative to the package, AST node) for every node in
+    the package source."""
     import ast
     import pathlib
 
@@ -274,10 +274,19 @@ def _package_calls():
     root = pathlib.Path(pkg.__file__).parent
     for path in root.rglob("*.py"):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                yield path.relative_to(root).as_posix(), name, node
+            yield path.relative_to(root).as_posix(), node
+
+
+def _package_calls():
+    """(module path relative to the package, called name, Call node) for
+    every call in the package source."""
+    import ast
+
+    for path, node in _package_nodes():
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            yield path, name, node
 
 
 def test_one_thread_pool_site_in_package():
@@ -302,3 +311,45 @@ def test_session_state_is_the_only_session_keying():
         ):
             offenders.append((path, ast.unparse(node)))
     assert not offenders, offenders
+
+
+#: The deployment settings the package may read from the environment,
+#: as (module, rendered key expression).  Everything else is a code
+#: path or an argument, never a process-wide switch.
+_ENV_ALLOWLIST = {
+    ("session.py", "'SPARK_MASTER'"),
+    ("session.py", "'SPARK_GRAFT_CPUS'"),
+    ("session.py", "'SPARK_GRAFT_SHUFFLE'"),
+    ("session.py", "'SPARK_GRAFT_DRIVER_MEM'"),
+    ("sources/flights_fixture.py", "FIXTURE_DIR_ENV"),
+    ("__main__.py", "f'UNICARGO_SPARK_{name.upper()}'"),
+    ("plans/inspect.py", "'SPARK_GRAFT_SF_DIR'"),
+    ("oracle.py", "'SPARK_GRAFT_SF_DIR'"),
+}
+
+
+def test_package_reads_only_allowlisted_env_vars():
+    """Every environment read in the package (``os.environ.get``,
+    ``os.getenv``, ``os.environ[...]``, ``... in os.environ``) names a
+    deployment setting from the allowlist: an env switch that picks
+    between code paths is a second path no caller selects."""
+    import ast
+
+    env = {"os.environ", "environ"}
+    reads = set()
+    for path, node in _package_nodes():
+        if isinstance(node, ast.Call) and node.args and ast.unparse(node.func) in (
+            "os.environ.get", "environ.get", "os.getenv", "getenv"
+        ):
+            reads.add((path, ast.unparse(node.args[0])))
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and ast.unparse(node.value) in env
+        ):
+            reads.add((path, ast.unparse(node.slice)))
+        elif isinstance(node, ast.Compare) and any(
+            ast.unparse(c) in env for c in node.comparators
+        ):
+            reads.add((path, ast.unparse(node.left)))
+    assert reads == _ENV_ALLOWLIST, sorted(reads ^ _ENV_ALLOWLIST)

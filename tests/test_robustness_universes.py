@@ -225,14 +225,10 @@ def test_stopped_session_state_is_collected(tmp_path):
     import subprocess
     import sys
 
-    from unicargo_medallion_data_pipeline_spark.pipelines.canonical import CANONICAL_DIR_ENV
-
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ)
-    env.pop(CANONICAL_DIR_ENV, None)
     proc = subprocess.run(
         [sys.executable, "-c", _DEAD_SESSION_SCRIPT, str(tmp_path)],
-        capture_output=True, text=True, timeout=420, env=env, cwd=repo,
+        capture_output=True, text=True, timeout=420, cwd=repo,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     out = json.loads(proc.stdout.strip().splitlines()[-1])

@@ -1,8 +1,7 @@
 """Round-11 hardening pins: promote_table crash recovery (rename-aside
 swap), the hoisted NULL-merge-key gate (ADVICE 1), nullability-normalized
 append compatibility (ADVICE 2), bronze staging cleanup on ANY failure
-(ADVICE 3), the UMDP_DISK_STAGING fallback (ADVICE 4), and nested-map
-canonical JSON (verdict task 7)."""
+(ADVICE 3), and nested-map canonical JSON (verdict task 7)."""
 
 from __future__ import annotations
 
@@ -248,34 +247,6 @@ def test_bronze_good_write_failure_leaks_no_staging(spark, monkeypatch):
     # previous published pair untouched
     assert spark.read.table("leak_bronze.airlines_raw").count() == 1
     assert spark.read.table("leak_bronze.airlines_raw_quarantine").count() == 1
-
-
-# --- ADVICE 4: opt-in disk staging fallback -----------------------------------
-
-
-def test_merge_disk_staging_fallback_matches_and_cleans_up(spark, monkeypatch):
-    """UMDP_DISK_STAGING=1 routes the self-overwrite pin through a
-    sibling staging directory: same merge result, staging dir removed."""
-    from unicargo_medallion_data_pipeline_spark.sources.merge import (
-        merge_upsert_partitioned,
-    )
-
-    root = tempfile.mkdtemp(prefix="dstg_")
-    target = os.path.join(root, "fact")
-    spark.createDataFrame(
-        [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0)], "k int, day string, v double"
-    ).write.mode("overwrite").partitionBy("day").parquet(target)
-
-    monkeypatch.setenv("UMDP_DISK_STAGING", "1")
-    updates = spark.createDataFrame([(2, "d1", 20.0), (9, "d2", 9.0)], "k int, day string, v double")
-    merge_upsert_partitioned(spark, target, updates, ["k"], "day")
-    monkeypatch.undo()
-
-    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got == {1: 1.0, 2: 20.0, 3: 3.0, 9: 9.0}
-    # the sibling staging dir was cleaned up
-    leftovers = [n for n in os.listdir(root) if n.startswith("_merge_staging_")]
-    assert leftovers == []
 
 
 # --- task 7: nested-map canonical JSON ----------------------------------------

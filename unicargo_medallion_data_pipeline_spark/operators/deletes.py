@@ -228,40 +228,31 @@ def propagate_deletes(
     survivors = touched.join(keys, key_cols, "left_anti")
 
     # `survivors` reads the partitions it will overwrite: pin its blocks
-    # (localCheckpoint by default; UMDP_DISK_STAGING=1 opts into
-    # sibling-dir staging — see pin_for_self_overwrite), then
-    # dynamic-overwrite.  The pinned frame also serves the after-count
-    # audit below without a re-read, so cleanup runs after the audit.
-    from unicargo_medallion_data_pipeline_spark.sources.staging import (
-        pin_for_self_overwrite,
-    )
-
-    staged, _cleanup = pin_for_self_overwrite(survivors, target_path, "deletes")
-    try:
-        write_dynamic_overwrite(staged, target_path, partition_col)
-        # Emptied partitions are absent from the staged data, so dynamic
-        # overwrite left their old files alive: drop the directories.
-        # The on-disk names carry Hive/Spark %XX escaping (and the null
-        # sentinel), so NEVER construct them from the raw value — a
-        # value containing ':' or ' ' would target a path that does not
-        # exist, fs.delete would no-op silently, and the "erased" rows
-        # would stay readable while the audit claimed zero.  Instead
-        # list the real directories and match their UNESCAPED values —
-        # parsed back through the partition column's (read-back) type
-        # and re-rendered by cast-to-string, so both sides compare in
-        # the same canonical space even when the dir rendering differs
-        # from the column's string form (decimal 'rate=1.10' reads back
-        # as double → '1.1').
-        after_counts = {
-            "None" if r[0] is None else r[0]: r["count"]
-            for r in staged.groupBy(
-                F.col(partition_col).cast("string")
-            )
-            .count()
-            .collect()
-        }
-    finally:
-        _cleanup()
+    # with an eager localCheckpoint, then dynamic-overwrite.  The pinned
+    # frame also serves the after-count audit below without a re-read.
+    staged = survivors.localCheckpoint(eager=True)
+    write_dynamic_overwrite(staged, target_path, partition_col)
+    # Emptied partitions are absent from the staged data, so dynamic
+    # overwrite left their old files alive: drop the directories.
+    # The on-disk names carry Hive/Spark %XX escaping (and the null
+    # sentinel), so NEVER construct them from the raw value — a
+    # value containing ':' or ' ' would target a path that does not
+    # exist, fs.delete would no-op silently, and the "erased" rows
+    # would stay readable while the audit claimed zero.  Instead
+    # list the real directories and match their UNESCAPED values —
+    # parsed back through the partition column's (read-back) type
+    # and re-rendered by cast-to-string, so both sides compare in
+    # the same canonical space even when the dir rendering differs
+    # from the column's string form (decimal 'rate=1.10' reads back
+    # as double → '1.1').
+    after_counts = {
+        "None" if r[0] is None else r[0]: r["count"]
+        for r in staged.groupBy(
+            F.col(partition_col).cast("string")
+        )
+        .count()
+        .collect()
+    }
     emptied = {
         ps for ps in part_strs if after_counts.get(ps, 0) == 0
     }

@@ -209,18 +209,10 @@ def merge_additive_rollup(
     )
 
     # `combined` reads the target partitions it will overwrite: pin its
-    # blocks (localCheckpoint by default; UMDP_DISK_STAGING=1 opts into
-    # sibling-dir staging — see pin_for_self_overwrite), then
-    # dynamic-overwrite.  Dynamic overwrite commits at job end, so any
-    # failure — including executor loss taking checkpoint blocks —
-    # aborts with the target intact.
-    from unicargo_medallion_data_pipeline_spark.sources.staging import (
-        pin_for_self_overwrite,
-        write_dynamic_overwrite,
-    )
+    # blocks with an eager localCheckpoint, then dynamic-overwrite.
+    # Dynamic overwrite commits at job end, so any failure — including
+    # executor loss taking checkpoint blocks — aborts with the target
+    # intact.
+    from unicargo_medallion_data_pipeline_spark.sources.staging import write_dynamic_overwrite
 
-    pinned, cleanup = pin_for_self_overwrite(combined, target_path, "rollup")
-    try:
-        write_dynamic_overwrite(pinned, target_path, partition_col)
-    finally:
-        cleanup()
+    write_dynamic_overwrite(combined.localCheckpoint(eager=True), target_path, partition_col)

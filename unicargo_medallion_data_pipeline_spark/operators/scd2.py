@@ -510,38 +510,24 @@ def _write_scd2_delta(
     ``_cur_*`` columns, ``new_current`` including the untouched current
     rows that used to re-read the partition being overwritten), so
     nothing here reads the files the dynamic overwrite replaces and the
-    former ``pin_for_self_overwrite`` materialization of ``new_current``
-    was a whole redundant job per batch (guide §1.2).  The
-    ``UMDP_DISK_STAGING=1`` deployment posture keeps its disk staging
-    (blocks that survive executor loss).  Crash posture
-    unchanged: history append FIRST, current overwrite LAST — a crash
-    between the two leaves the old current partition intact (retry then
-    re-closes — duplicate history rows, dedupable on the full row — but
-    never a current partition that forgot its history); an executor
-    loss during the overwrite fails the job before the swap completes,
-    same as a failure during the old staged write."""
-    import os
+    former self-overwrite pin of ``new_current`` was a whole redundant
+    job per batch (guide §1.2).  Crash posture unchanged: history
+    append FIRST, current overwrite LAST — a crash between the two
+    leaves the old current partition intact (retry then re-closes —
+    duplicate history rows, dedupable on the full row — but never a
+    current partition that forgot its history); an executor loss during
+    the overwrite fails the job before the swap completes, same as a
+    failure during the old staged write."""
+    from unicargo_medallion_data_pipeline_spark.sources.staging import write_dynamic_overwrite
 
-    from unicargo_medallion_data_pipeline_spark.sources.staging import (
-        pin_for_self_overwrite,
-        write_dynamic_overwrite,
-    )
-
-    if os.environ.get("UMDP_DISK_STAGING") == "1":
-        pinned, cleanup = pin_for_self_overwrite(new_current, target_path, "scd2")
-    else:
-        pinned, cleanup = new_current, (lambda: None)
-    try:
-        if n_changed:
-            (
-                closed.write.mode("append")
-                .format("parquet")
-                .partitionBy("scd_state")
-                .save(target_path)
-            )
-        write_dynamic_overwrite(pinned, target_path, "scd_state")
-    finally:
-        cleanup()
+    if n_changed:
+        (
+            closed.write.mode("append")
+            .format("parquet")
+            .partitionBy("scd_state")
+            .save(target_path)
+        )
+    write_dynamic_overwrite(new_current, target_path, "scd_state")
 
 
 def apply_scd2_manifest(

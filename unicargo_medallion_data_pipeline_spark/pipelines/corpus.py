@@ -1,8 +1,9 @@
 """Corpus medallion: canonical universes PLUS the incrementally-
 maintained near-dup signature and ANN index silver tables.
 
-``pipelines/canonical.py`` materializes the identity universes (one
-clean row per doc_id / vec_id).  This module is the next silver step a
+``materialize_canonical`` writes the identity universes of
+``plans/universes.py`` (one clean row per doc_id / vec_id) as parquet,
+one keyed shuffle each.  On top of them sits the silver step a
 training-data lake actually runs per ingest batch: the MinHash
 signature table (``documents_minhash``), the winnow fingerprint index
 (``documents_winnow`` — the contamination pre-filter,
@@ -47,7 +48,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from unicargo_medallion_data_pipeline_spark.pipelines import canonical
 from unicargo_medallion_data_pipeline_spark.sources.readers import read_parquet_or_empty
 from unicargo_medallion_data_pipeline_spark.textops import dedup as dd
 from unicargo_medallion_data_pipeline_spark.textops import similarity as sim
@@ -76,6 +76,24 @@ WINNOW_W = 8
 
 def _path(out_dir: str, table: str) -> str:
     return os.path.join(out_dir, f"{table}.parquet")
+
+
+def materialize_canonical(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
+    """Write both canonical universes (the un-pinned
+    ``plans/universes`` builders) as parquet silver tables under
+    ``out_dir``; returns table name → path.  One keyed shuffle each,
+    and the written tables come out id-clustered by that shuffle."""
+    from unicargo_medallion_data_pipeline_spark.plans import universes
+
+    os.makedirs(out_dir, exist_ok=True)
+    out: dict[str, str] = {}
+    for table, builder in (
+        ("documents_canonical", universes.docs_with_text_plan),
+        ("embeddings_canonical", universes.embeddings_valid_plan),
+    ):
+        out[table] = _path(out_dir, table)
+        builder(spark, sf_dir).write.mode("overwrite").parquet(out[table])
+    return out
 
 
 def _clean_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -145,7 +163,7 @@ def run_corpus_medallion(
         asset_metadata_rows,
     )
 
-    paths = canonical.materialize_canonical(spark, sf_dir, out_dir)
+    paths = materialize_canonical(spark, sf_dir, out_dir)
     docs = spark.read.parquet(paths["documents_canonical"])
     embs = spark.read.parquet(paths["embeddings_canonical"])
     mh_path = _path(out_dir, MINHASH_TABLE)

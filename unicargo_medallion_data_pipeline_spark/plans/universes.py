@@ -91,17 +91,6 @@ def docs_with_text_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized(spark: SparkSession, table: str) -> DataFrame | None:
-    """The silver form of a universe, when one is registered (see
-    ``pipelines/canonical.py``): scan the already-clean parquet —
-    zero derivation cost, no pin needed (a plain source scan is
-    plan-stable by itself)."""
-    from unicargo_medallion_data_pipeline_spark.pipelines.canonical import canonical_path
-
-    path = canonical_path(table)
-    return spark.read.parquet(path) if path else None
-
-
 # Per-session pin memo: every consumer query would otherwise re-derive
 # the universe (one dedup shuffle + an eager localCheckpoint) even
 # within one session, where the result is identical — the same
@@ -131,11 +120,7 @@ def docs_with_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan the canonical frame into several plan branches (nodes +
     quality in doc_neardup_representatives, shingles + rescore sides
     in the LSH family), and the pin keeps the executed-plan census
-    deterministic under AQE.  Lake scale: a materialized silver table
-    (``pipelines/canonical.py`` — used automatically when registered)."""
-    silver = _materialized(spark, "documents_canonical")
-    if silver is not None:
-        return silver
+    deterministic under AQE."""
     return _pinned(spark, sf_dir, "documents_canonical", docs_with_text_plan)
 
 
@@ -168,12 +153,7 @@ def embeddings_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan branches (query side + corpus side + rescore), and an unpinned
     dedup window would re-run per branch AND let AQE's runtime stage
     choices vary between executions (observed: executed-codegen-span
-    census flapping 11↔13 for knn_ivf).  At lake scale this frame is
-    the materialized clean silver table, written once
-    (``pipelines/canonical.py`` — used automatically when registered)."""
-    silver = _materialized(spark, "embeddings_canonical")
-    if silver is not None:
-        return silver
+    census flapping 11↔13 for knn_ivf)."""
     return _pinned(spark, sf_dir, "embeddings_canonical", embeddings_valid_plan)
 
 

@@ -42,8 +42,8 @@ _DEFAULT_CONF: dict[str, str] = {
     # wrong sort-free SMJ.  save_bucketed_table guarantees the one-file
     # layout (repartition onto the bucket hash before write), verifies
     # it on disk, and stamps spark_graft.one_file_per_bucket;
-    # sources.writers.read_bucketed_table additionally refuses (or
-    # path-scan-degrades) unverifiable tables as defense-in-depth.
+    # sources.writers.read_bucketed_table additionally refuses
+    # unverifiable tables as defense-in-depth.
     # Benefit: removes the per-query Sort under every sort-merge join
     # on bucketed facts — at 100 TB that is re-sorting the lake once
     # per query versus never.  Cost: a file listing at planning,

@@ -15,10 +15,9 @@ Shape: ONE job for all targeted partitions.
      bucket) tuple lands in exactly one task, so each rewritten partition
      produces at most ``n_target`` files — per-partition file-count
      control in a single shuffle.
-  4. Stage + dynamic partition overwrite (same hygiene as
-     ``sources/merge.py``: staging dir removed in a ``finally``;
-     dynamic mode and string partition typing are both per-read/
-     per-write scoped — no session conf is ever mutated).
+  4. Stage + dynamic partition overwrite (staging dir removed in a
+     ``finally``; dynamic mode and string partition typing are both
+     per-read/per-write scoped — no session conf is ever mutated).
 
 Untouched partitions are never read or rewritten.
 """
@@ -268,7 +267,7 @@ def compact_unpartitioned_path(
     its own files, and after thousands of batches the anti-join
     admission scan pays listing + tiny-file open costs on each ingest.
     This is the maintenance pass that folds them back: one read of the
-    fragmented table, pinned via ``pin_for_self_overwrite`` (Spark
+    fragmented table, pinned with an eager ``localCheckpoint`` (Spark
     cannot overwrite a path mid-read), one hash repartition to the
     target count, one overwrite.
 
@@ -288,15 +287,6 @@ def compact_unpartitioned_path(
     if nfiles <= n_target:
         return None
 
-    from unicargo_medallion_data_pipeline_spark.sources.staging import (
-        pin_for_self_overwrite,
-    )
-
-    pinned, cleanup = pin_for_self_overwrite(
-        spark.read.parquet(path), path, "compact_flat"
-    )
-    try:
-        pinned.repartition(n_target).write.mode("overwrite").parquet(path)
-    finally:
-        cleanup()
+    pinned = spark.read.parquet(path).localCheckpoint(eager=True)
+    pinned.repartition(n_target).write.mode("overwrite").parquet(path)
     return nfiles

@@ -212,17 +212,8 @@ def merge_upsert_partitioned(
     # write_stream_with_merge).  Fault posture: dynamic overwrite
     # commits partitions at job end, so a failure — including executor
     # loss taking checkpoint blocks with it — aborts the job with the
-    # target intact; UMDP_DISK_STAGING=1 opts back into sibling-dir
-    # disk staging for flaky clusters / very large batches (see
-    # pin_for_self_overwrite).  Dynamic overwrite stays a per-WRITE
-    # option, never session state.
-    from unicargo_medallion_data_pipeline_spark.sources.staging import (
-        pin_for_self_overwrite,
-        write_dynamic_overwrite,
-    )
+    # target intact and the caller retries from the source.  Dynamic
+    # overwrite stays a per-WRITE option, never session state.
+    from unicargo_medallion_data_pipeline_spark.sources.staging import write_dynamic_overwrite
 
-    pinned, cleanup = pin_for_self_overwrite(merged, target_path, "merge")
-    try:
-        write_dynamic_overwrite(pinned, target_path, partition_col)
-    finally:
-        cleanup()
+    write_dynamic_overwrite(merged.localCheckpoint(eager=True), target_path, partition_col)

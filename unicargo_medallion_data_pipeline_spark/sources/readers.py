@@ -69,7 +69,6 @@ def read_csv_with_quarantine(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    header: bool = True,
     quote_audit: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """S1 hardened for production ingest: ``(good, quarantine)`` split.
@@ -80,6 +79,8 @@ def read_csv_with_quarantine(
     DROPMALFORMED loses the evidence.  The quarantine pattern keeps all
     three properties: good rows flow typed, every rejected ORIGINAL line
     is preserved verbatim for replay/debugging, and nothing aborts.
+    Every file starts with a header line (S1's shape; ``csv_line_census``
+    subtracts one per file for the conservation gate).
 
     One physical pass over the input: the parsed frame (with the
     corrupt-record column populated by the CSV parser itself) is pinned
@@ -147,7 +148,7 @@ def read_csv_with_quarantine(
     aug = StructType([*schema.fields]).add(CORRUPT_COL, StringType())
     df = (
         spark.read.schema(aug)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)

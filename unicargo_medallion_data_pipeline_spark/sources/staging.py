@@ -2,11 +2,13 @@
 
 ``tempfile.mkdtemp`` is DRIVER-LOCAL: on a real cluster the executors
 cannot see a path under the driver's ``/tmp``, so a staged write +
-read-back through one only works in local mode.  Every stage-then-swap
-in this engine (MERGE, rollup maintenance, compaction) instead stages to
-a sibling directory on the SAME filesystem as the target — visible to
-every executor wherever the target lives (file://, hdfs://, s3a://) —
-and removes it through the Hadoop FileSystem API.
+read-back through one only works in local mode.  The engine's one
+stage-then-swap (partitioned compaction) instead stages to a sibling
+directory on the SAME filesystem as the target — visible to every
+executor wherever the target lives (file://, hdfs://, s3a://) — and
+removes it through the Hadoop FileSystem API.  Writes that overwrite
+what they read (MERGE, rollup maintenance, deletes, flat compaction)
+pin their input with an eager ``localCheckpoint`` instead.
 
 The sibling starts with ``_`` so that even when the parent directory is
 itself scanned as a table root, Spark's file index ignores the staging
@@ -40,33 +42,6 @@ def write_dynamic_overwrite(df, target_path: str, *partition_cols: str) -> None:
         .partitionBy(*partition_cols)
         .save(target_path)
     )
-
-
-def pin_for_self_overwrite(df, target_path: str, prefix: str):
-    """Materialize a frame that is about to overwrite partitions it was
-    read from (Spark cannot overwrite a path mid-read) and return
-    ``(pinned_df, cleanup)``; call ``cleanup()`` after the write.
-
-    Default path: eager ``localCheckpoint`` — executor-block-manager
-    storage, cluster-valid, no filesystem round-trip.  The documented
-    trade (round-10 ADVICE item 4): checkpoint blocks pin the touched
-    partitions in executor memory/local disk, so an executor loss
-    mid-write always fails the job (retried from the source by the
-    caller), and a very large touched-partition set shifts storage
-    pressure onto executor local disk.  Set ``UMDP_DISK_STAGING=1`` to
-    fall back to the pre-round-10 sibling-directory disk staging —
-    two extra filesystem passes, but blocks survive executor loss and
-    spill to the TARGET filesystem instead — for very large batches or
-    flaky clusters.  Per-process env knob, not a per-call flag, because
-    the choice is a deployment posture, not a query property."""
-    import os
-
-    if os.environ.get("UMDP_DISK_STAGING") == "1":
-        spark = df.sparkSession
-        stg = staging_path(target_path, prefix)
-        df.write.mode("overwrite").format("parquet").save(stg)
-        return spark.read.parquet(stg), lambda: remove_path(spark, stg)
-    return df.localCheckpoint(eager=True), lambda: None
 
 
 def staging_path(target_path: str, prefix: str) -> str:

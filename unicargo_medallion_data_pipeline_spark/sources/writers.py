@@ -51,17 +51,15 @@ def save_to_table(
     config: TableConfig,
     spark: SparkSession,
     mode: str = "overwrite",
-    overwrite_schema: bool = True,
-    file_format: str | None = None,
     target_files_per_partition: int | None = None,
 ) -> str:
-    """S5/S6 — write a DataFrame as a managed table and return its name.
+    """S5/S6 — write a DataFrame as a :data:`DEFAULT_FORMAT` managed
+    table and return its name.
 
-    ``mode='overwrite'`` + ``overwrite_schema`` is the full-rewrite path;
-    ``mode='append'`` the incremental gold path.
+    ``mode='overwrite'`` is the full-rewrite path and replaces the
+    table's schema too; ``mode='append'`` the incremental gold path.
     """
     ensure_database(spark, config.database)
-    fmt = file_format or DEFAULT_FORMAT
     if target_files_per_partition and config.partition_by:
         # Cluster all rows of one partition VALUE into at most
         # ``target_files_per_partition`` write tasks, so a W-task job
@@ -81,8 +79,8 @@ def save_to_table(
                 )
             )
         df = df.repartition(*cols)
-    writer = df.write.mode(mode).format(fmt)
-    if overwrite_schema and mode == "overwrite":
+    writer = df.write.mode(mode).format(DEFAULT_FORMAT)
+    if mode == "overwrite":
         writer = writer.option("overwriteSchema", "true")
     if config.partition_by:
         writer = writer.partitionBy(*config.partition_by)
@@ -165,7 +163,7 @@ def write_partitioned_path(
 #: scan's claimed order — which is only safe when every bucket is a
 #: single sorted file.  The property scopes that session-wide trust to
 #: tables THIS engine wrote and verified: :func:`read_bucketed_table`
-#: refuses (or degrades) any bucketed table without it whose layout
+#: refuses any bucketed table without it whose layout
 #: cannot be re-verified on disk (r14 verdict item 1 — the only known
 #: path to a silently wrong SMJ answer).
 ONE_FILE_PER_BUCKET_PROP = "spark_graft.one_file_per_bucket"
@@ -242,9 +240,7 @@ def _trusted_bucketed(spark: SparkSession) -> set[str]:
     return session_state(spark).setdefault("trusted_bucketed", set())
 
 
-def read_bucketed_table(
-    spark: SparkSession, name: str, on_violation: str = "refuse"
-) -> DataFrame:
+def read_bucketed_table(spark: SparkSession, name: str) -> DataFrame:
     """Guarded scan of a bucketed table under the engine's
     ``bucketedTableScan.outputOrdering`` trust (r14 verdict item 1).
 
@@ -253,13 +249,8 @@ def read_bucketed_table(
     returned as a plain catalog scan — the SMJ above it may drop its
     sort.  Any other bucketed table (foreign writer, pre-r14 engine,
     hand-copied files) is re-verified on disk; if one-file-per-bucket
-    cannot be proven:
-
-    - ``on_violation='refuse'`` raises :class:`BucketLayoutError` —
-      wrong rows must never be the failure mode;
-    - ``on_violation='degrade'`` reads the table's files as a PATH scan
-      (no bucket metadata reaches the planner, so joins re-shuffle and
-      re-sort: slower, never wrong).
+    cannot be proven it raises :class:`BucketLayoutError` — wrong rows
+    must never be the failure mode.
 
     Non-bucketed tables pass straight through — the conf only affects
     bucketed scans.
@@ -273,7 +264,7 @@ def read_bucketed_table(
     memo is exactly as trusty as the catalog state it reflects (a
     FOREIGN process rewriting the table mid-session evades it — the
     same exposure the catalog itself has between plan and execution).
-    Refusals and degraded reads are never memoized.
+    Refusals are never memoized.
     """
     if name in _trusted_bucketed(spark):
         return spark.table(name)
@@ -292,17 +283,11 @@ def read_bucketed_table(
     ):
         _trusted_bucketed(spark).add(name)
         return spark.table(name)
-    if on_violation == "degrade":
-        # Path scan: same data, no bucketing/sort metadata → the
-        # planner inserts its own Exchange+Sort. Correct, just slower.
-        return spark.read.format("parquet").schema(
-            spark.table(name).schema
-        ).load(table_location(spark, name))
     raise BucketLayoutError(
         f"bucketed table {name} has multi-file (or unverifiable) buckets; "
         "under spark.sql.legacy.bucketedTableScan.outputOrdering=true a "
         "sort-merge join over it can return WRONG ROWS. Rewrite it via "
-        "save_bucketed_table, or read with on_violation='degrade'."
+        "save_bucketed_table."
     )
 
 

@@ -32,14 +32,11 @@ def enrich_stream(
     static_dim: DataFrame,
     on: list[str] | str,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Join a streaming DataFrame against a static dimension.
 
-    ``broadcast_dim`` adds an explicit broadcast hint — correct for
-    bounded dims (airlines, airports, nations); pass False for
-    linear-growth dims and let the size threshold decide, same policy as
-    the batch star joins.
+    The dimension carries an explicit broadcast hint — correct for the
+    bounded dims this joins (airlines, airports, nations).
     """
     if not stream_df.isStreaming:
         raise ValueError("enrich_stream expects a streaming DataFrame on the left")
@@ -51,6 +48,5 @@ def enrich_stream(
             f"stream-static join supports {sorted(_SUPPORTED)} with the stream "
             f"on the left; got {how!r} (right/full would need unbounded state)"
         )
-    dim = F.broadcast(static_dim) if broadcast_dim else static_dim
     keys = [on] if isinstance(on, str) else list(on)
-    return stream_df.join(dim, keys, how)
+    return stream_df.join(F.broadcast(static_dim), keys, how)

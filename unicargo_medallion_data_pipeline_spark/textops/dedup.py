@@ -109,7 +109,6 @@ def minhash_lsh_candidates(
     k: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash LSH.
 
@@ -117,7 +116,7 @@ def minhash_lsh_candidates(
     est_jaccard from signature agreement, jaccard exact over shingle sets.
     One shuffle (the band-bucket self-join); no O(n²) stage anywhere.
 
-    ``materialize`` pins the (id, shingles, signature) frame with an eager
+    The (id, shingles, signature) frame is pinned with an eager
     ``localCheckpoint`` before it fans out: the frame feeds THREE plan
     branches (band explode + both rescore sides), and Spark re-evaluates
     a subtree per branch — without pinning, the shingle+signature hash
@@ -137,9 +136,9 @@ def minhash_lsh_candidates(
     sh = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh")
     )
-    payload = sh.select("id", "sh", minhash_signature("sh", k).alias("sig"))
-    if materialize:
-        payload = payload.localCheckpoint(eager=True)
+    payload = sh.select(
+        "id", "sh", minhash_signature("sh", k).alias("sig")
+    ).localCheckpoint(eager=True)
     # The band self-join carries ONLY (id, band_idx, band_hash): with b
     # bands every document explodes b ways, and dragging shingle arrays /
     # signatures through that join would shuffle b copies of each
