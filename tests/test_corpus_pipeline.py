@@ -202,62 +202,3 @@ def test_corpus_assets_table_full_and_incremental(spark, tmp_path, binary_dir):
     assert replay.admitted_assets == 0
     inc = spark.read.parquet(_os.path.join(inc_dir, f"{corpus.ASSETS_TABLE}.parquet"))
     assert key(inc) == key(full)
-
-
-def test_compact_corpus_tables_preserves_rows_and_admission(spark, tmp_path, binary_dir):
-    """The maintenance pass (r14): per-batch appends fragment the
-    maintained tables; compaction folds them back without changing a
-    row — admission idempotence (replay = no-op) and future-batch
-    admission must survive it."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from unicargo_medallion_data_pipeline_spark.pipelines import corpus
-    from unicargo_medallion_data_pipeline_spark.sources.readers import (
-        load_table,
-        read_binary_files,
-    )
-
-    out = str(tmp_path / "frag")
-    docs = load_table(spark, SF, "documents")
-    # four ingest batches -> >= 4 files per table
-    for s in range(4):
-        corpus.apply_corpus_batch(
-            spark, out, new_docs=docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == s)
-        )
-    corpus.apply_corpus_batch(
-        spark, out, new_assets=read_binary_files(spark, _os.path.join(binary_dir, "batch0"))
-    )
-    corpus.apply_corpus_batch(
-        spark, out, new_assets=read_binary_files(spark, binary_dir)
-    )
-
-    mh_path = _os.path.join(out, f"{corpus.MINHASH_TABLE}.parquet")
-    n_files = lambda p: len(_glob.glob(_os.path.join(p, "*.parquet")))
-    assert n_files(mh_path) >= 4
-    key = lambda df: sorted(map(tuple, df.collect()))
-    before_mh = key(spark.read.parquet(mh_path))
-    as_path = _os.path.join(out, f"{corpus.ASSETS_TABLE}.parquet")
-    before_as = key(spark.read.parquet(as_path))
-
-    compacted = corpus.compact_corpus_tables(spark, out)
-    # all five tables present; the fragmented ones reported with their
-    # pre-compaction file counts
-    assert compacted[corpus.MINHASH_TABLE] >= 4
-    assert compacted[corpus.ASSETS_TABLE] >= 2
-    assert n_files(mh_path) == 1 and n_files(as_path) == 1
-
-    # row-identical (no dedup, no loss)
-    assert key(spark.read.parquet(mh_path)) == before_mh
-    assert key(spark.read.parquet(as_path)) == before_as
-
-    # admission semantics survive: replay is still a no-op, and a
-    # genuinely new batch still admits
-    replay = corpus.apply_corpus_batch(
-        spark, out, new_docs=docs, new_assets=read_binary_files(spark, binary_dir)
-    )
-    assert replay.admitted_docs == 0 and replay.admitted_assets == 0
-    # second compaction is a no-op (already at target layout)
-    assert corpus.compact_corpus_tables(spark, out) == {}

@@ -123,10 +123,13 @@ def test_emptied_partition_cleanup_with_escaped_dir_names(spark, tmp_path):
     """Partition values Spark %XX-escapes on disk ('a:b' → 'a%3Ab'): the
     emptied-partition cleanup must delete the REAL directory, not a
     path built from the raw value (which does not exist — fs.delete
-    would no-op silently and the 'erased' rows would stay readable)."""
+    would no-op silently and the 'erased' rows would stay readable).
+    Numeric-looking string values ('00', '07') stay strings: the
+    emptied 'part=00' dir is matched under its own name (not as 0),
+    and the survivor reads back as '07'."""
     path = os.path.join(tmp_path, "t")
     spark.createDataFrame(
-        [(1, 7, "x:1"), (2, 7, "x:2"), (3, 8, "x:2")],
+        [(1, 7, "x:1"), (2, 7, "x:2"), (3, 8, "x:2"), (4, 7, "00"), (5, 8, "07")],
         "row_id int, user_id int, part string",
     ).write.mode("overwrite").partitionBy("part").parquet(path)
     # on-disk form is escaped
@@ -142,9 +145,12 @@ def test_emptied_partition_cleanup_with_escaped_dir_names(spark, tmp_path):
     assert not any("x%3A1" in d for d in os.listdir(path)), (
         "escaped emptied-partition directory survived the cleanup"
     )
+    assert "part=00" not in os.listdir(path), (
+        "numeric-looking emptied-partition directory survived the cleanup"
+    )
     left = spark.read.parquet(path)
     assert [(r["row_id"], r["part"]) for r in left.orderBy("row_id").collect()] == [
-        (3, "x:2")
+        (3, "x:2"), (5, "07")
     ]
 
 

@@ -1,5 +1,6 @@
 """Multimodal plumbing tests: binary columns, Arrow-batched mapInPandas
-feature extraction, per-row decode-error isolation, frame sampling."""
+feature extraction, per-row decode-error isolation, binary-column
+metadata extraction and the PNG codec."""
 
 from __future__ import annotations
 
@@ -9,9 +10,35 @@ from pyspark.sql import functions as F
 
 @pytest.fixture(scope="module")
 def assets(spark):
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import synthetic_assets
+    """Deterministic 64-row asset table: the ``image/png`` third carries
+    REAL PNG files (deterministic pixel ramp, encoded by ``PngCodec``),
+    wav/mp4 assets carry synthetic raw bytes, and every 13th asset is
+    empty (the decode error channel)."""
+    import numpy as np
 
-    return synthetic_assets(spark, n=64)
+    from unicargo_medallion_data_pipeline_spark.textops.multimodal import (
+        ASSET_SCHEMA,
+        PngCodec,
+    )
+
+    rows = []
+    png = PngCodec()
+    for i in range(64):
+        media = ["image/png", "audio/wav", "video/mp4"][i % 3]
+        w, h = 64 + i % 128, 64 + (i * 3) % 128
+        if media == "image/png":
+            yy, xx = np.mgrid[0:h, 0:w]
+            arr = np.stack(
+                [(yy + i) % 256, (xx * 3 + i) % 256, (yy + xx) % 256], axis=-1
+            ).astype(np.uint8)
+            content = png.encode(arr)
+        else:
+            content = bytes((i * 7 + j) % 256 for j in range(100 + (i % 5) * 50))
+        if i % 13 == 0:
+            content = b""  # corrupt asset → decode error channel
+        meta = (w, h, 3, (i % 10) * 1000 if media == "video/mp4" else None)
+        rows.append((i, media, content, meta))
+    return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
 def test_asset_schema_roundtrip(spark, assets, tmp_path_factory):
@@ -36,7 +63,7 @@ def test_extract_features_batched(spark, assets):
     errs = [r for r in rows.values() if r["decode_status"].startswith("error")]
     # i % 13 == 0 assets are corrupt (empty) → exactly 5 of 64
     assert len(errs) == 5 and len(ok) == 59
-    # deterministic fake decode: mean byte of asset 1's bytes
+    # non-PNG asset: raw-byte statistics, the mean of asset 1's bytes
     import statistics
 
     expected = statistics.mean((1 * 7 + j) % 256 for j in range(150))
@@ -52,90 +79,6 @@ def test_decode_errors_do_not_kill_stage(spark, assets):
     out = extract_features(corrupt).collect()
     assert len(out) == 5
     assert all(r["decode_status"].startswith("error") for r in out)
-
-
-def test_frame_sampling(spark, assets):
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import sample_frames
-
-    frames = sample_frames(assets, every_ms=1000)
-    got = frames.groupBy("asset_id").count().collect()
-    by_id = {r["asset_id"]: r["count"] for r in got}
-    # video assets have duration (i % 10)*1000 ms → i % 10 frames at 1fps
-    for aid, n in by_id.items():
-        assert aid % 3 == 2, "only video assets may emit frames"
-        assert n == aid % 10
-    # ts aligned to the sampling grid
-    assert frames.filter(F.col("ts_ms") % 1000 != 0).count() == 0
-
-
-def test_resize_end_to_end_with_default_codec(spark, assets):
-    """decode → nearest-neighbour resample → encode runs end-to-end with
-    the AutoCodec default: real PNG assets come back as REAL 32x24 PNGs
-    (r15 — parse-verified), fake-decoded modalities as raw arrays."""
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import (
-        PngCodec,
-        resize_images,
-    )
-
-    out = {r["asset_id"]: r for r in resize_images(assets, 32, 24).collect()}
-    assert len(out) == 64
-    resized = [(a, r) for a, r in out.items() if a % 13 != 0]
-    for a, r in resized:
-        assert r["meta"]["width"] == 32 and r["meta"]["height"] == 24
-        if a % 3 == 0:  # image/png: a genuine PNG with the new dims
-            arr = PngCodec().decode(bytes(r["content"]), 0, 0, 0)
-            assert arr.shape == (24, 32, 3)
-        else:
-            assert len(r["content"]) == 32 * 24 * r["meta"]["n_channels"]
-    # corrupt (empty) assets pass through unchanged, stage survives
-    for a in (0, 13, 26, 39, 52):
-        assert bytes(out[a]["content"]) == b""
-    # deterministic: same input → bit-identical output
-    again = {r["asset_id"]: bytes(r["content"])
-             for r in resize_images(assets, 32, 24).collect()}
-    assert all(bytes(out[a]["content"]) == again[a] for a in out)
-
-
-def test_resize_nearest_neighbour_values(spark, assets):
-    """Spot-check the resample math against a driver-side recomputation."""
-    import numpy as np
-
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import (
-        FakeNumpyCodec, resize_images,
-    )
-
-    row = assets.filter(F.col("asset_id") == 1).collect()[0]
-    w0, h0, nc = row["meta"]["width"], row["meta"]["height"], row["meta"]["n_channels"]
-    img = FakeNumpyCodec().decode(bytes(row["content"]), w0, h0, nc)
-    rows_ = np.minimum(np.floor((np.arange(24) + 0.5) * h0 / 24).astype(int), h0 - 1)
-    cols_ = np.minimum(np.floor((np.arange(32) + 0.5) * w0 / 32).astype(int), w0 - 1)
-    expected = FakeNumpyCodec().encode(img[rows_][:, cols_])
-    got = resize_images(assets.filter(F.col("asset_id") == 1), 32, 24).collect()[0]
-    assert bytes(got["content"]) == expected
-
-
-def test_frame_grab_pipeline(spark, assets):
-    """decode → features → resize → frame-grab chained end-to-end."""
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import (
-        extract_features, resize_images, sample_frames,
-    )
-
-    small = resize_images(assets, 16, 16)
-    feats = extract_features(small)
-    assert feats.filter(F.col("decode_status") == "ok").count() == 59
-    frames = sample_frames(small, every_ms=1000, grab=True).collect()
-    assert len(frames) > 0
-    # every sampled frame of a non-corrupt video decodes to a hash;
-    # frame 0's hash differs from frame 1's (the fake codec 'seeks')
-    by_asset = {}
-    for fr in frames:
-        by_asset.setdefault(fr["asset_id"], {})[fr["frame_idx"]] = fr["frame_hash"]
-    multi = [h for h in by_asset.values() if len(h) >= 2 and None not in h.values()]
-    assert multi and all(h[0] != h[1] for h in multi)
-    # deterministic across reruns
-    again = sample_frames(small, every_ms=1000, grab=True).collect()
-    assert sorted((f["asset_id"], f["frame_idx"], f["frame_hash"]) for f in frames) == \
-           sorted((f["asset_id"], f["frame_idx"], f["frame_hash"]) for f in again)
 
 
 # ---------------------------------------------------------------------------
@@ -391,7 +334,7 @@ def test_png_codec_roundtrip_real_pixels():
         arr = (rng.random((13, 17, ch)) * 255).astype(np.uint8)
         enc = png.encode(arr)
         assert enc[:8] == PNG_SIGNATURE and enc.endswith(b"IEND\xaeB`\x82")
-        dec = png.decode(enc, 0, 0, 0)
+        dec = png.decode(enc)
         assert dec.shape == (13, 17, ch)
         assert np.array_equal(dec, arr)
 
@@ -447,7 +390,7 @@ def test_png_codec_decodes_all_five_filters():
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-    assert np.array_equal(PngCodec().decode(data, 0, 0, 0), img)
+    assert np.array_equal(PngCodec().decode(data), img)
 
 
 def test_png_codec_error_channel():
@@ -460,7 +403,7 @@ def test_png_codec_error_channel():
     good = png.encode(np.zeros((4, 4, 3), dtype=np.uint8))
     for bad in (b"", b"notapng", good[:20], good[:40]):
         with _pytest.raises(ValueError):
-            png.decode(bad, 0, 0, 0)
+            png.decode(bad)
 
 
 def test_extract_features_real_png_mean_is_pixel_mean(spark, assets):
@@ -484,70 +427,3 @@ def test_extract_features_real_png_mean_is_pixel_mean(spark, assets):
     )
     assert row["decode_status"] == "ok"
     assert abs(row["mean_byte"] - float(arr.mean())) < 1e-9
-
-
-def test_wav_codec_roundtrip_and_stdlib_cross_check():
-    """r15: real PCM WAV decode/encode.  Round-trip is bit-exact, the
-    emitted file is readable by the INDEPENDENT stdlib ``wave`` module
-    with identical frames, and a wave-module-written file decodes
-    identically through our chunk walker (which also tolerates extra
-    chunks)."""
-    import io
-    import wave as wave_mod
-
-    import numpy as np
-
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import WavCodec
-
-    wc = WavCodec()
-    rng = np.random.default_rng(7)
-    samples = (rng.random((1000, 2)) * 65535 - 32768).astype("<i2")
-    enc = wc.encode(samples, 8000)
-    dec, rate = wc.decode(enc)
-    assert rate == 8000 and np.array_equal(dec, samples)
-
-    # stdlib wave reads our file byte-identically
-    with wave_mod.open(io.BytesIO(enc)) as r:
-        assert (r.getnchannels(), r.getsampwidth(), r.getframerate()) == (2, 2, 8000)
-        assert r.readframes(r.getnframes()) == samples.tobytes()
-
-    # and a stdlib-written file (independent construction) decodes
-    buf = io.BytesIO()
-    with wave_mod.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(44100)
-        w.writeframes(samples[:, 0].tobytes())
-    dec2, rate2 = wc.decode(buf.getvalue())
-    assert rate2 == 44100 and np.array_equal(dec2[:, 0], samples[:, 0])
-
-    # extra chunk between fmt and data is walked over, not fatal
-    raw = bytearray(enc)
-    # insert a LIST chunk right after the 12-byte RIFF/WAVE header
-    extra = b"LIST" + (4).to_bytes(4, "little") + b"INFO"
-    patched = bytes(raw[:12]) + extra + bytes(raw[12:])
-    # fix riff size
-    patched = (
-        patched[:4]
-        + (len(patched) - 8).to_bytes(4, "little")
-        + patched[8:]
-    )
-    dec3, _ = wc.decode(patched)
-    assert np.array_equal(dec3, samples)
-
-
-def test_wav_codec_error_channel():
-    import numpy as np
-    import pytest as _pytest
-
-    from unicargo_medallion_data_pipeline_spark.textops.multimodal import WavCodec
-
-    wc = WavCodec()
-    good = wc.encode(np.zeros((10, 1), dtype="<i2"), 8000)
-    # 8-bit format refused (bits field at fmt offset 14)
-    bad_bits = bytearray(good)
-    fmt_off = good.index(b"fmt ") + 8
-    bad_bits[fmt_off + 14 : fmt_off + 16] = (8).to_bytes(2, "little")
-    for bad in (b"", b"RIFFxxxx", good[:30], bytes(bad_bits)):
-        with _pytest.raises(ValueError):
-            wc.decode(bad)

@@ -263,18 +263,27 @@ def test_fan_out_keeps_order_and_failures_cancel_pending():
     assert time.perf_counter() - t0 < 5
 
 
-def _package_nodes():
-    """(module path relative to the package, AST node) for every node in
-    the package source."""
+def _package_modules():
+    """(module path relative to the package, parsed module) for every
+    package source file."""
     import ast
     import pathlib
 
     import unicargo_medallion_data_pipeline_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    for path in root.rglob("*.py"):
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            yield path.relative_to(root).as_posix(), node
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), ast.parse(path.read_text(), str(path))
+
+
+def _package_nodes():
+    """(module path relative to the package, AST node) for every node in
+    the package source."""
+    import ast
+
+    for path, tree in _package_modules():
+        for node in ast.walk(tree):
+            yield path, node
 
 
 def _package_calls():
@@ -295,6 +304,159 @@ def test_one_thread_pool_site_in_package():
     drivers build on fan_out instead of starting their own pool."""
     sites = {path for path, name, _ in _package_calls() if name == "ThreadPoolExecutor"}
     assert sites == {"pipelines/orchestrator.py"}
+
+
+#: Definitions only tests call that stay because they are the
+#: reference's own capability surface: (module, name) → SURVEY ID.
+_REFERENCE_SURFACE = {
+    ("streaming/readers.py", "read_streaming_table"): "S8",
+    ("streaming/writers.py", "write_stream_to_table"): "S10",
+    ("streaming/writers.py", "write_stream_with_merge"): "S11",
+    ("pipelines/incremental.py", "process_incremental_flights"): "S12",
+    ("pipelines/orchestrator.py", "run_tasks"): "§3.1",
+    ("pipelines/orchestrator.py", "create_entity_tasks"): "§3.1",
+    ("pipelines/orchestrator.py", "Task"): "§3.1",
+    ("pipelines/orchestrator.py", "RunResult"): "§3.1",
+    ("quality/validation.py", "orphan_fk_counts"): "Q2",
+}
+
+#: Definitions that no entry point reaches yet, each due for deletion
+#: with the tests that cover only it.  The set may only shrink.
+_PENDING_DELETION = {
+    ("config/tables.py", "load_yaml_config"),
+    ("operators/diff.py", "schema_diff"),
+    ("operators/layout.py", "clustering_report"),
+    ("operators/layout.py", "write_zordered"),
+    ("operators/rollup.py", "hll_estimate"),
+    ("operators/rollup.py", "hll_sketch"),
+    ("operators/scd2.py", "apply_scd2_manifest"),
+    ("operators/sketch.py", "kmv_estimate"),
+    ("operators/skew.py", "salted_two_phase_distinct"),
+    ("oracle.py", "_class_unsafe"),
+    ("oracle.py", "oracle_type_defects"),
+    ("pipelines/corpus.py", "materialize_canonical"),
+    ("pipelines/corpus.py", "read_corpus_table"),
+    ("pipelines/corpus.py", "read_ivfadc_index"),
+    ("pipelines/corpus.py", "run_corpus_medallion"),
+    ("quality/observe.py", "assert_observed_rows"),
+    ("quality/observe.py", "observe_metrics"),
+    ("sources/readers.py", "read_json"),
+    ("sources/readers.py", "read_orc_or_empty"),
+    ("sources/readers.py", "read_parquet"),
+    ("sources/readers.py", "read_xml_or_empty"),
+    ("sources/synthetic.py", "SyntheticEventsDataSource"),
+    ("sources/synthetic.py", "SyntheticEventsReader"),
+    ("sources/synthetic.py", "SyntheticEventsStreamReader"),
+    ("sources/synthetic.py", "_RangePartition"),
+    ("sources/synthetic.py", "_gen_batch"),
+    ("sources/synthetic.py", "_opts"),
+    ("sources/synthetic.py", "register_synthetic_source"),
+    ("streaming/dedup.py", "dedup_stream_exact"),
+    ("streaming/dedup.py", "dedup_stream_within_watermark"),
+    ("streaming/enrich.py", "enrich_stream"),
+    ("streaming/erasure.py", "_max_erasure_batch"),
+    ("streaming/erasure.py", "erasure_audit_frame"),
+    ("streaming/erasure.py", "write_stream_erasure"),
+    ("streaming/erasure.py", "write_stream_erasure_manifest"),
+    ("streaming/joins.py", "interval_join_streams"),
+    ("streaming/observe.py", "ProgressLogListener"),
+    ("streaming/observe.py", "read_progress_log"),
+    ("streaming/observe.py", "write_progress_log"),
+    ("streaming/quota.py", "QuotaProcessor"),
+    ("streaming/quota.py", "_annotate"),
+    ("streaming/quota.py", "_make_v1_fn"),
+    ("streaming/quota.py", "enforce_quota"),
+    ("streaming/quota.py", "quota_output_schema"),
+    ("streaming/quota.py", "state_v2_available"),
+    ("streaming/quota.py", "use_rocksdb_state"),
+    ("streaming/sketch.py", "write_stream_kmv_sketch"),
+    ("streaming/topk.py", "write_stream_window_topk"),
+    ("streaming/windows.py", "session_window_agg"),
+    ("streaming/windows.py", "sliding_window_agg"),
+    ("streaming/writers.py", "write_stream_to_manifest"),
+    ("textops/analysis.py", "bigrams"),
+    ("textops/udtf.py", "SentenceSplitter"),
+    ("textops/udtf.py", "register_sentence_splitter"),
+}
+
+
+def test_every_package_definition_is_reachable():
+    """Every top-level package def/class is reached, by name, from an
+    entry point: module-level package code (imports excluded), a
+    ``@register``-ed catalog query, a root script, perfbench, or a
+    ``_REFERENCE_SURFACE`` entry — directly or through another reached
+    definition.  A name counts as a Name, an Attribute, an
+    identifier-shaped string (getattr / registry lookups) or an
+    import alias of one.  Tests are not entry points, so code that only
+    tests call shows up here.  The unreachable set must equal
+    ``_PENDING_DELETION`` exactly: a new orphan fails, and so does a
+    pending entry that was deleted or became reachable."""
+    import ast
+    import pathlib
+    import re
+
+    import unicargo_medallion_data_pipeline_spark as pkg
+
+    modules = dict(_package_modules())
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    scripts = [
+        ast.parse(path.read_text(), str(path))
+        for path in [*repo.glob("*.py"), *(repo / "perfbench").rglob("*.py")]
+        if not path.name.startswith("test_")
+    ]
+    aliases: dict[str, set[str]] = {}
+    for tree in [*modules.values(), *scripts]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.alias) and n.asname:
+                aliases.setdefault(n.asname, set()).add(n.name.rpartition(".")[2])
+    ident = re.compile(r"[A-Za-z_]\w*\Z")
+
+    def names_in(nodes):
+        out = set()
+        for node in nodes:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name):
+                    out.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    out.add(n.attr)
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str) and ident.match(n.value):
+                    out.add(n.value)
+        return out.union(*(aliases.get(name, ()) for name in out))
+
+    def registered(st):
+        return any(
+            isinstance(d, ast.Call)
+            and "register" in (getattr(d.func, "id", None), getattr(d.func, "attr", None))
+            for d in st.decorator_list
+        )
+
+    defs, roots, live = {}, list(scripts), set()
+    for path, tree in modules.items():
+        for st in tree.body:
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[(path, st.name)] = st
+                if not registered(st) and (path, st.name) not in _REFERENCE_SURFACE:
+                    continue
+                live.add((path, st.name))
+            roots.append(st)
+    assert set(_REFERENCE_SURFACE) <= set(defs), set(_REFERENCE_SURFACE) - set(defs)
+
+    seen = names_in(roots)
+    grew = True
+    while grew:
+        grew = False
+        for key, st in defs.items():
+            if key not in live and key[1] in seen:
+                live.add(key)
+                seen |= names_in([st])
+                grew = True
+    unreachable = set(defs) - live
+    assert unreachable == _PENDING_DELETION, {
+        "unreachable, not pending": sorted(unreachable - _PENDING_DELETION),
+        "pending, no longer unreachable": sorted(_PENDING_DELETION - unreachable),
+    }
 
 
 def test_session_state_is_the_only_session_keying():

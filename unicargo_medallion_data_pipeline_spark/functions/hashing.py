@@ -5,8 +5,8 @@ reject MapType — and VariantType — at analysis time, so any operator
 that hashes or orders by "all columns" of a CALLER-supplied frame
 breaks on the first map-carrying schema.  Round 8 fixed one such site
 (the CDC no-`_seq` tiebreak); round 9's hunt found the same latent
-class in the streaming merge tiebreak, the compaction bucket id, and
-the skew salt.  This module is the single definition they all share.
+class in the streaming merge tiebreak and the skew salt.  This module
+is the single definition they all share.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ deletion job must emit.
 from __future__ import annotations
 
 import posixpath
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +37,26 @@ from unicargo_medallion_data_pipeline_spark.sources.writers import delta_availab
 
 #: Audit schema returned by :func:`propagate_deletes`.
 AUDIT_COLS = ("partition", "rows_before", "rows_after", "rows_deleted")
+
+#: Hive's directory name for a NULL partition value.
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+_ESC = re.compile("%([0-9A-Fa-f]{2})")
+
+
+def _unescape_hive(name: str) -> str:
+    """Decode Hive/Spark partition-dir escaping (special chars → %XX)."""
+    return _ESC.sub(lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _parse_partition_dir(part_dir: str) -> list[tuple[str, str | None]]:
+    """'day=d1/country=US%3AWA' → [(col, value-or-None)] with dir-name
+    escaping decoded and the Hive null sentinel mapped to None."""
+    out: list[tuple[str, str | None]] = []
+    for piece in part_dir.split("/"):
+        col, _, raw = piece.partition("=")
+        out.append((_unescape_hive(col), None if raw == _HIVE_NULL else _unescape_hive(raw)))
+    return out
 
 
 def _audit_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -257,10 +278,6 @@ def propagate_deletes(
         ps for ps in part_strs if after_counts.get(ps, 0) == 0
     }
     if emptied:
-        from unicargo_medallion_data_pipeline_spark.sources.compaction import (
-            _parse_partition_dir,
-        )
-
         jvm = spark._jvm
         hroot = jvm.org.apache.hadoop.fs.Path(target_path)
         fs = hroot.getFileSystem(spark._jsc.hadoopConfiguration())

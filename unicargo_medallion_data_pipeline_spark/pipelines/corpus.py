@@ -356,34 +356,3 @@ def read_ivfadc_index(spark: SparkSession, out_dir: str) -> DataFrame:
     ivf = read_corpus_table(spark, out_dir, IVF_TABLE).select("vid", "cell")
     pq = read_corpus_table(spark, out_dir, PQ_TABLE).select("vid", "codes")
     return ivf.join(pq, "vid")
-
-
-#: Every maintained corpus silver table, for maintenance passes.
-ALL_TABLES = (MINHASH_TABLE, WINNOW_TABLE, IVF_TABLE, PQ_TABLE, ASSETS_TABLE)
-
-
-def compact_corpus_tables(
-    spark: SparkSession, out_dir: str, target_file_bytes: int = 128 << 20
-) -> dict[str, int]:
-    """Fold the per-batch append files of every maintained silver table
-    back to ``ceil(bytes/target)`` files (the ingest scheduler's
-    maintenance pass — after thousands of ``apply_corpus_batch`` calls
-    the admission anti-joins pay listing + tiny-file open costs per
-    ingest).  Row-preserving by construction (one read → repartition →
-    overwrite, no dedup: admission idempotence must survive
-    compaction).  Returns {table: files_before} for tables compacted;
-    absent tables are skipped.  Run inside the same no-concurrent-
-    writer window as any raw-parquet rewrite."""
-    from unicargo_medallion_data_pipeline_spark.sources.compaction import (
-        compact_unpartitioned_path,
-    )
-
-    out: dict[str, int] = {}
-    for table in ALL_TABLES:
-        p = _path(out_dir, table)
-        if not os.path.exists(p):
-            continue
-        before = compact_unpartitioned_path(spark, p, target_file_bytes)
-        if before is not None:
-            out[table] = before
-    return out

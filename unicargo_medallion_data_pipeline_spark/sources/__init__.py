@@ -1,1 +1,1 @@
-from unicargo_medallion_data_pipeline_spark.sources.readers import load_table, load_tables  # noqa: F401
+from unicargo_medallion_data_pipeline_spark.sources.readers import load_table  # noqa: F401

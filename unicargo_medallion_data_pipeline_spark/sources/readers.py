@@ -5,6 +5,7 @@ Reference counterparts:
   - S2 catalog table scan: gold notebooks cell 2-3
   - S3 path scan: ``bronze_orchestrator.py:231``
   - S4 local-collection source: ``src/logging_utils/task_logger_utils.py:169``
+    (``spark.createDataFrame`` itself — no wrapper here)
 
 The engine is declarative-first: every reader returns a lazy DataFrame so
 Catalyst can push filters/column pruning into the scan.  Schemas are always
@@ -456,11 +457,6 @@ def read_xml_or_empty(
     )
 
 
-def from_rows(spark: SparkSession, rows, schema: StructType) -> DataFrame:
-    """S4 — local-collection source (generated dims, log rows)."""
-    return spark.createDataFrame(rows, schema)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (parquet) by name.
 
@@ -500,10 +496,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several testdata tables at once: ``t = load_tables(...); t['orders']``."""
-    if not names:
-        names = TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -1,24 +1,14 @@
-"""Cluster-safe staging directories for write-stage-swap patterns.
+"""Path-table write helpers: per-write dynamic partition overwrite,
+Hadoop-FS directory removal, and process-scoped scratch directories.
 
-``tempfile.mkdtemp`` is DRIVER-LOCAL: on a real cluster the executors
-cannot see a path under the driver's ``/tmp``, so a staged write +
-read-back through one only works in local mode.  The engine's one
-stage-then-swap (partitioned compaction) instead stages to a sibling
-directory on the SAME filesystem as the target — visible to every
-executor wherever the target lives (file://, hdfs://, s3a://) — and
-removes it through the Hadoop FileSystem API.  Writes that overwrite
-what they read (MERGE, rollup maintenance, deletes, flat compaction)
-pin their input with an eager ``localCheckpoint`` instead.
-
-The sibling starts with ``_`` so that even when the parent directory is
-itself scanned as a table root, Spark's file index ignores the staging
-remnants (same convention as ``_SUCCESS`` / ``_temporary``).
+Writes that overwrite what they read (MERGE, rollup maintenance,
+deletes) pin their input with an eager ``localCheckpoint`` and then
+call :func:`write_dynamic_overwrite`; directory removal goes through
+the Hadoop FileSystem API so it works wherever the target lives
+(file://, hdfs://, s3a://).
 """
 
 from __future__ import annotations
-
-import posixpath
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -44,13 +34,6 @@ def write_dynamic_overwrite(df, target_path: str, *partition_cols: str) -> None:
     )
 
 
-def staging_path(target_path: str, prefix: str) -> str:
-    """A unique staging dir next to ``target_path`` (same filesystem)."""
-    clean = target_path.rstrip("/")
-    parent = posixpath.dirname(clean) or "."
-    return posixpath.join(parent, f"_{prefix}_staging_{uuid.uuid4().hex}")
-
-
 def remove_path(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` via the Hadoop FileSystem API."""
     jvm = spark._jvm
@@ -70,8 +53,7 @@ def scratch_dir(prefix: str) -> str:
     interpreter exit: bare ``tempfile.mkdtemp`` per query invocation
     leaked ~10 table copies per catalog sweep, and repeated bench
     best-of-N runs multiplied that until /tmp filled on long-running
-    harness hosts.  Driver-local by design (unlike :func:`staging_path`,
-    which stages next to cluster targets): these tables exist only for
+    harness hosts.  Driver-local by design: these tables exist only for
     the duration of a local correctness/bench run."""
     global _SCRATCH_ROOT
     import atexit

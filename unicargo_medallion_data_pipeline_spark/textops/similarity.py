@@ -206,17 +206,6 @@ def lsh_bucket_sql(qvec_sql: str, dim: int, n_planes: int = 8, seed: int = 42) -
     return f"CAST({terms} AS BIGINT)"
 
 
-def lsh_bucket(qvec_col: str, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
-    """Random-hyperplane signature: n_planes sign bits packed into a long.
-
-    Vectors with small angular distance share buckets with high
-    probability; candidate pairs are then generated by an equi-join on
-    the bucket id (one shuffle, no cross product).  Takes the name of a
-    pre-quantized array<long> column (see ``quantized``).
-    """
-    return F.expr(lsh_bucket_sql(f"`{qvec_col}`", dim, n_planes, seed))
-
-
 def lsh_buckets_multi(
     qvec_col: str, dim: int, n_planes: int, n_tables: int, seed: int = 42
 ) -> Column:
