@@ -285,12 +285,13 @@ def test_quarantine_gate_failure_preserves_previous_bronze(spark, monkeypatch):
 
 
 def test_grain_derived_gold_matches_direct(spark, medallion):
-    """Round-10 verdict task 6: every gold table the medallion driver
-    derives from the shared (date, airline) grain — and the
-    route-traffic-derived ROUTE_SUITE tables — must equal the direct fact builders
-    BITWISE (exceptAll both ways, schema equality).  The grain partials
-    are exact longs, so even the double avg/rate columns must match
-    bit-for-bit (see the derivation note in gold_flights.py)."""
+    """Every gold table the medallion driver derives from a shared frame
+    must equal its fact lowering BITWISE (exceptAll both ways, schema
+    equality): each Rollup from the full-union grain AND from a grain
+    built for that rollup alone (the grain a ``--gold`` subset builds),
+    and each RouteTable from the shared route_traffic frame.  The grain
+    partials are exact longs, so even the double avg/rate columns must
+    match bit-for-bit (see the declarations section in gold_flights.py)."""
     from unicargo_medallion_data_pipeline_spark.pipelines import gold_flights as g
 
     fact = spark.read.table(medallion.silver["flights"])
@@ -299,31 +300,31 @@ def test_grain_derived_gold_matches_direct(spark, medallion):
     dd = spark.read.table(medallion.silver["dates"])
     dims = {"dd": dd, "da": da, "dp": dp}
 
-    def direct_of(name):
-        fn, needed = g.GOLD_SUITE[name]
-        return fn(fact, *[dims[d] for d in needed])
+    def assert_same(name, direct, derived, source):
+        assert derived.schema == direct.schema, f"{name} from {source}"
+        assert (
+            direct.exceptAll(derived).count() == 0
+            and derived.exceptAll(direct).count() == 0
+        ), f"{name} derived from {source} differs from the fact lowering"
 
-    grain = g.build_date_airline_grain(fact).persist()
+    rollups = {n: (s, d) for n, (s, d) in g.GOLD_SUITE.items() if isinstance(s, g.Rollup)}
+    routes = {n: s for n, (s, _) in g.GOLD_SUITE.items() if isinstance(s, g.RouteTable)}
+    assert len(rollups) == 8 and len(routes) == 4
+
+    grain = g.build_grain(fact, [s for s, _ in rollups.values()]).persist()
     try:
-        for name, (fn, needed) in g.GRAIN_SUITE.items():
-            direct = direct_of(name)
-            derived = fn(grain, *[dims[d] for d in needed])
-            assert derived.schema == direct.schema, name
-            assert (
-                direct.exceptAll(derived).count() == 0
-                and derived.exceptAll(direct).count() == 0
-            ), f"grain-derived {name} differs from the direct builder"
+        for name, (spec, needed) in rollups.items():
+            args = [dims[d] for d in needed]
+            direct = spec(fact, *args)
+            assert_same(name, direct, spec.from_grain(grain, *args), "the full grain")
+            own = g.build_grain(fact, [spec])
+            assert_same(name, direct, spec.from_grain(own, *args), "its own grain")
     finally:
         grain.unpersist()
     traffic = g.route_traffic(fact, dp).persist()
     try:
-        for name, fn in g.ROUTE_SUITE.items():
-            direct, derived = direct_of(name), fn(traffic)
-            assert derived.schema == direct.schema, name
-            assert (
-                direct.exceptAll(derived).count() == 0
-                and derived.exceptAll(direct).count() == 0
-            ), f"traffic-derived {name} differs from the direct builder"
+        for name, spec in routes.items():
+            assert_same(name, spec(fact, dp), spec.step(traffic), "the traffic frame")
     finally:
         traffic.unpersist()
 

@@ -242,7 +242,7 @@ def test_partitioned_path_scan_prunes_partitions(spark):
     sf = "/root/testdata/sf0.001"
     ev = load_table(spark, sf, "events").withColumn("day", F.to_date("ts"))
     d = tempfile.mkdtemp(prefix="src_part_")
-    write_partitioned_path(ev, d, ["day"], mode="overwrite", file_format="parquet")
+    write_partitioned_path(ev, d, ["day"])
 
     q = spark.read.parquet(d).filter(F.col("day") == "2024-01-05")
     buf = io.StringIO()

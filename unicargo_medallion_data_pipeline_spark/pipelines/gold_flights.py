@@ -17,9 +17,16 @@ no global sorts except final top-k (TakeOrderedAndProject), no windows
 over unpartitioned fact data (the share-of-total window in delay buckets
 runs over the aggregated bucket rows, and the rolling-OTP window is
 partitioned by airline over per-day rows).
+
+Eight (date, airline) rollups are declared once as ``Rollup`` specs and
+three route tables as ``RouteTable`` steps over ``route_traffic``; see
+the declarations section below.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,6 +42,168 @@ def _cnt_if(cond) -> F.Column:
 
 def _with_airline(fact: DataFrame, dim_airline: DataFrame) -> DataFrame:
     return fact.join(F.broadcast(dim_airline.select("airline_sk", "airline")), "airline_sk")
+
+
+# --- declarations: one spec per rollup, two lowerings -----------------------
+#
+# Eight gold tables group the same fact at coarsenings of (date, airline):
+# daily/monthly/quarterly/seasonal/weekend/dow roll the date up, the
+# operational summary rolls it away.  Each is one ``Rollup``: the dim
+# columns it joins, its group keys and its ``Measure``s.  A rollup lowers
+# two ways, the view lattice of Gray et al., *Data Cube* (ICDE 1996) and
+# Harinarayan et al., *Implementing Data Cubes Efficiently* (SIGMOD 1996):
+#   * ``rollup(fact, *dims)`` aggregates fact rows with each measure's
+#     ``fact()`` expression (the catalog queries, and the equality oracle);
+#   * ``rollup.from_grain(grain, *dims)`` re-aggregates the partial that
+#     ``build_grain`` computes at GRAIN_KEYS with each measure's
+#     ``merge()`` (the medallion driver: ~|dates| x |airlines| grain rows
+#     per table instead of one fact scan per table).
+# The grain carries the union of its rollups' ``parts``, nothing more.
+#
+# Losslessness: every fact measure involved is an INTEGER column, so
+#   * counts, conditional counts and sums re-sum exactly (long addition
+#     is associative),
+#   * Spark's avg over an int column keeps an internal DOUBLE sum whose
+#     value is EXACT while |sum| < 2^53 (2M rows x minute-scale ints is
+#     orders of magnitude below), so sum(partial long sums) equals it
+#     bit-for-bit and the final division is the identical double op,
+#   * stddev (weekly) and countDistinct (scorecard, utilization, route
+#     family) are NOT mergeable from such partials: those tables stay
+#     plain fact builders, and the route tables share ``route_traffic``.
+# ``tests/test_medallion.py::test_grain_derived_gold_matches_direct``
+# pins bitwise equality of the two lowerings (schema, exceptAll both ways).
+
+#: grain keys: day_of_week/day_name are degenerate date attributes the
+#: fact carries (functionally dependent on date_sk), included so the
+#: dow split needs no extra join.
+GRAIN_KEYS = ("date_sk", "day_of_week", "day_name", "airline_sk")
+
+
+@dataclass(frozen=True)
+class Measure:
+    """One rollup measure: ``fact()`` aggregates fact rows, ``parts`` are
+    the named exact partials it needs at the grain, and ``merge()``
+    re-aggregates those partials over grain rows.  Columns are built on
+    call, not at import: building one needs an active SparkContext."""
+
+    fact: Callable[[], F.Column]
+    parts: tuple[tuple[str, Callable[[], F.Column]], ...]
+    merge: Callable[[], F.Column]
+
+    @staticmethod
+    def count() -> Measure:
+        def n() -> F.Column:
+            return F.count(F.lit(1))
+
+        # coalesce pins the merged count NON-NULLABLE, like count(1); sum()
+        # alone is nullable, and its value over a non-empty group is the same.
+        return Measure(n, (("n", n),), lambda: F.coalesce(F.sum("n"), F.lit(0).cast("long")))
+
+    @staticmethod
+    def sum(col: str) -> Measure:
+        def total() -> F.Column:
+            return F.sum(col)
+
+        return Measure(total, ((f"sum_{col}", total),), lambda: F.sum(f"sum_{col}"))
+
+    @staticmethod
+    def avg(col: str) -> Measure:
+        total, nonnull = f"sum_{col}", f"nonnull_{col}"
+
+        # NULL when the merged count is zero, like avg over an all-NULL
+        # group; the guard also keeps ANSI mode from raising on 0 / 0.
+        def merge() -> F.Column:
+            s, c = F.sum(total), F.sum(nonnull)
+            return F.when(c > F.lit(0), s / c)
+
+        parts = ((total, lambda: F.sum(col)), (nonnull, lambda: F.count(col)))
+        return Measure(lambda: F.avg(col), parts, merge)
+
+    @staticmethod
+    def count_if(tag: str, cond: Callable[[], F.Column]) -> Measure:
+        def hits() -> F.Column:
+            return _cnt_if(cond())
+
+        return Measure(hits, ((f"if_{tag}", hits),), lambda: F.sum(f"if_{tag}"))
+
+    @staticmethod
+    def rate(tag: str, cond: Callable[[], F.Column]) -> Measure:
+        hits, n = Measure.count_if(tag, cond), Measure.count()
+        return Measure(
+            lambda: _pct(hits.fact(), n.fact()),
+            hits.parts + n.parts,
+            lambda: _pct(hits.merge(), n.merge()),
+        )
+
+
+@dataclass(frozen=True, kw_only=True)
+class Rollup:
+    """One (date, airline) rollup.  Either lowering joins ``dim_date``'s
+    ``dates`` columns (if any) and then the airline name (if
+    ``airline``), taking those dims positionally in that order, applies
+    ``derive``, groups by ``keys``, aggregates ``measures`` in output
+    order and applies ``post``."""
+
+    dates: tuple[str, ...] = ()
+    airline: bool = False
+    derive: Callable[[DataFrame], DataFrame] | None = None
+    keys: tuple[str, ...]
+    measures: tuple[tuple[str, Measure], ...]
+    post: Callable[[DataFrame], DataFrame] | None = None
+
+    def __call__(self, fact: DataFrame, *dims: DataFrame) -> DataFrame:
+        return self._lower(fact, dims, [m.fact().alias(name) for name, m in self.measures])
+
+    def from_grain(self, grain: DataFrame, *dims: DataFrame) -> DataFrame:
+        return self._lower(grain, dims, [m.merge().alias(name) for name, m in self.measures])
+
+    def _lower(self, rows: DataFrame, dims, aggs: list[F.Column]) -> DataFrame:
+        dims = list(dims)
+        if self.dates:
+            rows = rows.join(F.broadcast(dims.pop(0).select("date_sk", *self.dates)), "date_sk")
+        if self.airline:
+            rows = _with_airline(rows, dims.pop(0))
+        if self.derive is not None:
+            rows = self.derive(rows)
+        out = rows.groupBy(*self.keys).agg(*aggs)
+        return out if self.post is None else self.post(out)
+
+
+def build_grain(fact: DataFrame, rollups: list[Rollup]) -> DataFrame:
+    """The partial aggregate at GRAIN_KEYS that ``Rollup.from_grain``
+    re-aggregates: one keyed shuffle over the fact, carrying the union
+    of the given rollups' ``parts`` (each an exact long)."""
+    parts = {name: col for r in rollups for _, m in r.measures for name, col in m.parts}
+    return fact.groupBy(*GRAIN_KEYS).agg(*[col().alias(name) for name, col in parts.items()])
+
+
+@dataclass(frozen=True)
+class RouteTable:
+    """A route table that is a route-level ``step`` (filter or top-k)
+    over ``route_traffic``.  Called on ``(fact, dim_airport)`` it applies
+    ``step`` to a fresh aggregation; the medallion driver applies it to
+    the one shared traffic frame."""
+
+    step: Callable[..., DataFrame]
+
+    def __call__(self, fact: DataFrame, dim_airport: DataFrame, **params) -> DataFrame:
+        return self.step(route_traffic(fact, dim_airport), **params)
+
+
+def _cancelled() -> F.Column:
+    return F.col("cancelled") == 1
+
+
+def _diverted() -> F.Column:
+    return F.col("diverted") == 1
+
+
+def _delayed_departure() -> F.Column:
+    return F.col("departure_delay") > 15
+
+
+def _on_time() -> F.Column:
+    return F.col("arrival_delay") <= 0
 
 
 # --- 03_gold_flight_analytics ----------------------------------------------
@@ -68,47 +237,46 @@ def route_traffic(fact: DataFrame, dim_airport: DataFrame) -> DataFrame:
     )
 
 
-def top_routes(fact: DataFrame, dim_airport: DataFrame, k: int = 10) -> DataFrame:
-    """O3: top-k busiest routes, tie-broken for determinism
-    (``03_gold_flight_analytics.ipynb:140-141``)."""
-    return top_routes_from_traffic(route_traffic(fact, dim_airport), k)
+def _top_k(traffic: DataFrame, k: int) -> DataFrame:
+    return traffic.orderBy(F.col("total_flights").desc(), "origin_code", "dest_code").limit(k)
 
 
-def airline_operational_summary(fact: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """A2/A3: cancelled/diverted/delayed conditional counts + rates
-    (``03_gold_flight_analytics.ipynb:173-181``)."""
-    n = F.count(F.lit(1))
-    return (
-        _with_airline(fact, dim_airline)
-        .groupBy("airline_sk", "airline")
-        .agg(
-            n.alias("total_flights"),
-            _cnt_if(F.col("cancelled") == 1).alias("cancelled_flights"),
-            _cnt_if(F.col("diverted") == 1).alias("diverted_flights"),
-            _cnt_if(F.col("departure_delay") > 15).alias("delayed_departures"),
-            _pct(_cnt_if(F.col("cancelled") == 1), n).alias("cancellation_rate_pct"),
-            _pct(_cnt_if(F.col("departure_delay") > 15), n).alias("delay_rate_pct"),
-            _pct(_cnt_if(F.col("arrival_delay") <= 0), n).alias("on_time_rate_pct"),
-        )
-    )
+#: O3: top-k busiest routes, tie-broken for determinism
+#: (``03_gold_flight_analytics.ipynb:140-141``).
+top_routes = RouteTable(lambda traffic, k=10: _top_k(traffic, k))
+
+#: A2/A3: cancelled/diverted/delayed conditional counts + rates
+#: (``03_gold_flight_analytics.ipynb:173-181``).
+airline_operational_summary = Rollup(
+    airline=True,
+    keys=("airline_sk", "airline"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("cancelled_flights", Measure.count_if("cancelled", _cancelled)),
+        ("diverted_flights", Measure.count_if("diverted", _diverted)),
+        ("delayed_departures", Measure.count_if("delayed_departure", _delayed_departure)),
+        ("cancellation_rate_pct", Measure.rate("cancelled", _cancelled)),
+        ("delay_rate_pct", Measure.rate("delayed_departure", _delayed_departure)),
+        ("on_time_rate_pct", Measure.rate("on_time", _on_time)),
+    ),
+)
 
 
 # --- 01 daily / weekly / monthly -------------------------------------------
 
-def daily_flight_summary(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """A4 (``03_gold_unikargo_01_daily_analytics.ipynb:68-79``)."""
-    dd = F.broadcast(dim_date.select("date_sk", "full_date"))
-    return (
-        _with_airline(fact.join(dd, "date_sk"), dim_airline)
-        .groupBy("full_date", "airline")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("departure_delay").alias("avg_departure_delay"),
-            F.avg("arrival_delay").alias("avg_arrival_delay"),
-            _cnt_if(F.col("cancelled") == 1).alias("cancelled_flights"),
-            _cnt_if(F.col("arrival_delay") <= 0).alias("on_time_flights"),
-        )
-    )
+#: A4 (``03_gold_unikargo_01_daily_analytics.ipynb:68-79``).
+daily_flight_summary = Rollup(
+    dates=("full_date",),
+    airline=True,
+    keys=("full_date", "airline"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_departure_delay", Measure.avg("departure_delay")),
+        ("avg_arrival_delay", Measure.avg("arrival_delay")),
+        ("cancelled_flights", Measure.count_if("cancelled", _cancelled)),
+        ("on_time_flights", Measure.count_if("on_time", _on_time)),
+    ),
+)
 
 
 def weekly_flight_summary(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
@@ -127,18 +295,17 @@ def weekly_flight_summary(fact: DataFrame, dim_date: DataFrame, dim_airline: Dat
     )
 
 
-def monthly_flight_trends(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """A6 (``03_gold_unikargo_01_daily_analytics.ipynb:135-141``)."""
-    dd = F.broadcast(dim_date.select("date_sk", "year", "month"))
-    return (
-        _with_airline(fact.join(dd, "date_sk"), dim_airline)
-        .groupBy("year", "month", "airline")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("arrival_delay").alias("avg_arrival_delay"),
-            F.sum("elapsed_time").alias("total_elapsed_time"),
-        )
-    )
+#: A6 (``03_gold_unikargo_01_daily_analytics.ipynb:135-141``).
+monthly_flight_trends = Rollup(
+    dates=("year", "month"),
+    airline=True,
+    keys=("year", "month", "airline"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_arrival_delay", Measure.avg("arrival_delay")),
+        ("total_elapsed_time", Measure.sum("elapsed_time")),
+    ),
+)
 
 
 # --- 02 airline performance -------------------------------------------------
@@ -169,35 +336,30 @@ def airline_scorecard(fact: DataFrame, dim_airline: DataFrame) -> DataFrame:
     )
 
 
-def airline_day_of_week(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """J6/A-family: airline × day-of-week grid
-    (``03_gold_unikargo_02_airline_performance.ipynb:120-129``).  The fact
-    carries day_of_week/day_name as degenerate date attributes (like the
-    reference's fact projection), so no dim_date join is needed — the dim
-    is accepted for signature parity with the reference's aliased-join
-    variant but the carried columns win."""
-    del dim_date
-    return (
-        _with_airline(fact, dim_airline)
-        .groupBy("airline", "day_of_week", "day_name")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("departure_delay").alias("avg_departure_delay"),
-        )
-    )
+#: J6/A-family: airline × day-of-week grid
+#: (``03_gold_unikargo_02_airline_performance.ipynb:120-129``).  The fact
+#: carries day_of_week/day_name as degenerate date attributes (like the
+#: reference's fact projection), so no dim_date join is needed.
+airline_day_of_week = Rollup(
+    airline=True,
+    keys=("airline", "day_of_week", "day_name"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_departure_delay", Measure.avg("departure_delay")),
+    ),
+)
 
 
 # --- 03 route analytics ------------------------------------------------------
 
-def significant_routes(fact: DataFrame, dim_airport: DataFrame, floor: int = 100) -> DataFrame:
-    """A1+P7: routes over the significance floor
-    (``03_gold_unikargo_03_route_analytics.ipynb:80-114``)."""
-    return significant_routes_from_traffic(route_traffic(fact, dim_airport), floor)
+#: A1+P7: routes over the significance floor
+#: (``03_gold_unikargo_03_route_analytics.ipynb:80-114``).
+significant_routes = RouteTable(
+    lambda traffic, floor=100: traffic.filter(F.col("total_flights") >= floor)
+)
 
-
-def busiest_routes(fact: DataFrame, dim_airport: DataFrame, k: int = 50) -> DataFrame:
-    """O3 (``03_gold_unikargo_03_route_analytics.ipynb:130-131``)."""
-    return top_routes(fact, dim_airport, k)
+#: O3 (``03_gold_unikargo_03_route_analytics.ipynb:130-131``).
+busiest_routes = RouteTable(lambda traffic, k=50: _top_k(traffic, k))
 
 
 # --- 04 airport analytics ----------------------------------------------------
@@ -251,47 +413,43 @@ def _season_order() -> F.Column:
     )
 
 
-def seasonal_flight_summary(fact: DataFrame, dim_date: DataFrame) -> DataFrame:
-    """A9 + O2 (``03_gold_unikargo_05_time_based_analytics.ipynb:67-86``)."""
-    dd = F.broadcast(dim_date.select("date_sk", "year", "month"))
-    return (
-        fact.join(dd, "date_sk")
-        .withColumn("season", _season())
-        .groupBy("year", "season")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("departure_delay").alias("avg_departure_delay"),
-            _cnt_if(F.col("cancelled") == 1).alias("cancelled_flights"),
-        )
-        .orderBy("year", _season_order())
-    )
+#: A9 + O2 (``03_gold_unikargo_05_time_based_analytics.ipynb:67-86``).
+seasonal_flight_summary = Rollup(
+    dates=("year", "month"),
+    derive=lambda rows: rows.withColumn("season", _season()),
+    keys=("year", "season"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_departure_delay", Measure.avg("departure_delay")),
+        ("cancelled_flights", Measure.count_if("cancelled", _cancelled)),
+    ),
+    post=lambda out: out.orderBy("year", _season_order()),
+)
 
+#: A10 (``03_gold_unikargo_05_time_based_analytics.ipynb:108-118``).
+weekend_weekday_split = Rollup(
+    dates=("is_weekend",),
+    airline=True,
+    keys=("airline", "is_weekend"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_departure_delay", Measure.avg("departure_delay")),
+    ),
+    post=lambda out: out.withColumn(
+        "day_type", F.when(F.col("is_weekend") == 1, "Weekend").otherwise("Weekday")
+    ),
+)
 
-def weekend_weekday_split(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """A10 (``03_gold_unikargo_05_time_based_analytics.ipynb:108-118``)."""
-    dd = F.broadcast(dim_date.select("date_sk", "is_weekend"))
-    return (
-        _with_airline(fact.join(dd, "date_sk"), dim_airline)
-        .groupBy("airline", "is_weekend")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("departure_delay").alias("avg_departure_delay"),
-        )
-        .withColumn("day_type", F.when(F.col("is_weekend") == 1, "Weekend").otherwise("Weekday"))
-    )
-
-
-def quarterly_flight_summary(fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    """A11 (``03_gold_unikargo_05_time_based_analytics.ipynb:140-149``)."""
-    dd = F.broadcast(dim_date.select("date_sk", "year", "quarter"))
-    return (
-        _with_airline(fact.join(dd, "date_sk"), dim_airline)
-        .groupBy("year", "quarter", "airline")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            F.avg("arrival_delay").alias("avg_arrival_delay"),
-        )
-    )
+#: A11 (``03_gold_unikargo_05_time_based_analytics.ipynb:140-149``).
+quarterly_flight_summary = Rollup(
+    dates=("year", "quarter"),
+    airline=True,
+    keys=("year", "quarter", "airline"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("avg_arrival_delay", Measure.avg("arrival_delay")),
+    ),
+)
 
 
 # --- 06 delay analytics ------------------------------------------------------
@@ -361,25 +519,27 @@ def aircraft_utilization(fact: DataFrame, dim_date: DataFrame, dim_airline: Data
     )
 
 
-def rolling_on_time_performance(
-    fact: DataFrame, dim_date: DataFrame, dim_airline: DataFrame
-) -> DataFrame:
-    """W3: 7-day rolling OTP per airline
-    (``03_gold_unikargo_07_operational_efficiency_analytics.ipynb:98-108``).
-    Window over per-(airline, day) aggregates — state is 7 rows per
-    airline, partition-parallel."""
-    dd = F.broadcast(dim_date.select("date_sk", "full_date"))
-    daily = (
-        _with_airline(fact.join(dd, "date_sk"), dim_airline)
-        .groupBy("airline", "full_date")
-        .agg(
-            F.count(F.lit(1)).alias("total_flights"),
-            _cnt_if(F.col("arrival_delay") <= 0).alias("on_time_flights"),
-        )
-        .withColumn("daily_otp", _pct(F.col("on_time_flights"), F.col("total_flights")))
-    )
+def _rolling_otp(daily: DataFrame) -> DataFrame:
     w = Window.partitionBy("airline").orderBy("full_date").rowsBetween(-6, Window.currentRow)
-    return daily.withColumn("rolling_7d_otp", F.avg("daily_otp").over(w))
+    return daily.withColumn(
+        "daily_otp", _pct(F.col("on_time_flights"), F.col("total_flights"))
+    ).withColumn("rolling_7d_otp", F.avg("daily_otp").over(w))
+
+
+#: W3: 7-day rolling OTP per airline
+#: (``03_gold_unikargo_07_operational_efficiency_analytics.ipynb:98-108``).
+#: Window over per-(airline, day) aggregates — state is 7 rows per
+#: airline, partition-parallel.
+rolling_on_time_performance = Rollup(
+    dates=("full_date",),
+    airline=True,
+    keys=("airline", "full_date"),
+    measures=(
+        ("total_flights", Measure.count()),
+        ("on_time_flights", Measure.count_if("on_time", _on_time)),
+    ),
+    post=_rolling_otp,
+)
 
 
 def flight_number_performance(fact: DataFrame, dim_airline: DataFrame, floor: int = 50) -> DataFrame:
@@ -418,239 +578,23 @@ def distance_bucket_stats(fact: DataFrame) -> DataFrame:
     )
 
 
-# --- shared-grain derivation (round-10 verdict task 6) ----------------------
-#
-# Eight gold tables aggregate the SAME cached fact at grains that are all
-# coarsenings of (date, airline): daily/monthly/quarterly/seasonal/
-# weekend/dow roll the date up, scorecard-style summaries roll it away.
-# Re-scanning 2M cached fact rows once per table made the gold fan-out
-# 44% of the medallion wall time (docs/PLANS.md round-9 profile).  The
-# medallion driver therefore builds ONE partial-aggregate at the finest
-# shared grain and derives those eight tables from ~5k grain rows each.
-#
-# Losslessness (the reason this is safe to enable by default): every
-# fact measure involved is an INTEGER column, so
-#   * counts / conditional counts re-sum exactly (long addition is
-#     associative),
-#   * Spark's avg over an int column keeps an internal DOUBLE sum whose
-#     value is EXACT while |sum| < 2^53 (2M rows x minute-scale ints is
-#     orders of magnitude below), so sum(partial long sums) equals it
-#     bit-for-bit and the final division is the identical double op,
-#   * stddev (weekly) and countDistinct (scorecard, utilization, route
-#     family) are NOT losslessly mergeable from these partials — those
-#     tables deliberately stay on the direct fact path.
-# ``tests/test_medallion.py::test_grain_derived_gold_matches_direct``
-# pins bitwise equality (exceptAll both ways) for every derived table.
-# At 100 TB the same structure holds: one wide shuffle builds the grain
-# (cardinality = |dates| x |airlines|, tiny), and every derived table
-# re-aggregates the grain, not the fact.
-
-#: grain keys: day_of_week/day_name are degenerate date attributes the
-#: fact carries (functionally dependent on date_sk), included so the
-#: dow split needs no extra join.
-GRAIN_KEYS = ("date_sk", "day_of_week", "day_name", "airline_sk")
-
-
-def build_date_airline_grain(fact: DataFrame) -> DataFrame:
-    """The shared partial-aggregate all grain-derived gold tables
-    re-aggregate.  One keyed shuffle over the fact; every partial is an
-    exact long (see the section comment for the losslessness argument)."""
-    return fact.groupBy(*GRAIN_KEYS).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("departure_delay").alias("dep_delay_sum"),
-        F.count("departure_delay").alias("dep_delay_cnt"),
-        F.sum("arrival_delay").alias("arr_delay_sum"),
-        F.count("arrival_delay").alias("arr_delay_cnt"),
-        F.sum("elapsed_time").alias("elapsed_sum"),
-        _cnt_if(F.col("cancelled") == 1).alias("cancelled_cnt"),
-        _cnt_if(F.col("diverted") == 1).alias("diverted_cnt"),
-        _cnt_if(F.col("departure_delay") > 15).alias("delayed_dep_cnt"),
-        _cnt_if(F.col("arrival_delay") <= 0).alias("on_time_cnt"),
-    )
-
-
-def _recount(col: str = "n") -> F.Column:
-    """Merged count from partial counts, pinned NON-NULLABLE to match
-    the direct builders' ``count(1)`` schema exactly (sum() alone is
-    nullable; the value over a non-empty group is identical)."""
-    return F.coalesce(F.sum(col), F.lit(0).cast("long"))
-
-
-def _reavg(sum_col: str, cnt_col: str) -> F.Column:
-    """Merged average from exact partials: NULL when the merged count is
-    zero (matching Spark's avg over an all-NULL group) — the guard also
-    keeps ANSI mode from raising on the 0-denominator division."""
-    s, c = F.sum(sum_col), F.sum(cnt_col)
-    return F.when(c > F.lit(0), s / c)
-
-
-def airline_operational_summary_from_grain(grain: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    n = _recount("n")
-    return (
-        _with_airline(grain, dim_airline)
-        .groupBy("airline_sk", "airline")
-        .agg(
-            n.alias("total_flights"),
-            F.sum("cancelled_cnt").alias("cancelled_flights"),
-            F.sum("diverted_cnt").alias("diverted_flights"),
-            F.sum("delayed_dep_cnt").alias("delayed_departures"),
-            _pct(F.sum("cancelled_cnt"), n).alias("cancellation_rate_pct"),
-            _pct(F.sum("delayed_dep_cnt"), n).alias("delay_rate_pct"),
-            _pct(F.sum("on_time_cnt"), n).alias("on_time_rate_pct"),
-        )
-    )
-
-
-def daily_flight_summary_from_grain(grain: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "full_date"))
-    return (
-        _with_airline(grain.join(dd, "date_sk"), dim_airline)
-        .groupBy("full_date", "airline")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("dep_delay_sum", "dep_delay_cnt").alias("avg_departure_delay"),
-            _reavg("arr_delay_sum", "arr_delay_cnt").alias("avg_arrival_delay"),
-            F.sum("cancelled_cnt").alias("cancelled_flights"),
-            F.sum("on_time_cnt").alias("on_time_flights"),
-        )
-    )
-
-
-def monthly_flight_trends_from_grain(grain: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "year", "month"))
-    return (
-        _with_airline(grain.join(dd, "date_sk"), dim_airline)
-        .groupBy("year", "month", "airline")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("arr_delay_sum", "arr_delay_cnt").alias("avg_arrival_delay"),
-            F.sum("elapsed_sum").alias("total_elapsed_time"),
-        )
-    )
-
-
-def airline_day_of_week_from_grain(grain: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    return (
-        _with_airline(grain, dim_airline)
-        .groupBy("airline", "day_of_week", "day_name")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("dep_delay_sum", "dep_delay_cnt").alias("avg_departure_delay"),
-        )
-    )
-
-
-def seasonal_flight_summary_from_grain(grain: DataFrame, dim_date: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "year", "month"))
-    return (
-        grain.join(dd, "date_sk")
-        .withColumn("season", _season())
-        .groupBy("year", "season")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("dep_delay_sum", "dep_delay_cnt").alias("avg_departure_delay"),
-            F.sum("cancelled_cnt").alias("cancelled_flights"),
-        )
-        .orderBy("year", _season_order())
-    )
-
-
-def weekend_weekday_split_from_grain(grain: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "is_weekend"))
-    return (
-        _with_airline(grain.join(dd, "date_sk"), dim_airline)
-        .groupBy("airline", "is_weekend")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("dep_delay_sum", "dep_delay_cnt").alias("avg_departure_delay"),
-        )
-        .withColumn("day_type", F.when(F.col("is_weekend") == 1, "Weekend").otherwise("Weekday"))
-    )
-
-
-def quarterly_flight_summary_from_grain(grain: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "year", "quarter"))
-    return (
-        _with_airline(grain.join(dd, "date_sk"), dim_airline)
-        .groupBy("year", "quarter", "airline")
-        .agg(
-            _recount("n").alias("total_flights"),
-            _reavg("arr_delay_sum", "arr_delay_cnt").alias("avg_arrival_delay"),
-        )
-    )
-
-
-def rolling_on_time_performance_from_grain(grain: DataFrame, dim_date: DataFrame, dim_airline: DataFrame) -> DataFrame:
-    dd = F.broadcast(dim_date.select("date_sk", "full_date"))
-    daily = (
-        _with_airline(grain.join(dd, "date_sk"), dim_airline)
-        .groupBy("airline", "full_date")
-        .agg(
-            _recount("n").alias("total_flights"),
-            F.sum("on_time_cnt").alias("on_time_flights"),
-        )
-        .withColumn("daily_otp", _pct(F.col("on_time_flights"), F.col("total_flights")))
-    )
-    w = Window.partitionBy("airline").orderBy("full_date").rowsBetween(-6, Window.currentRow)
-    return daily.withColumn("rolling_7d_otp", F.avg("daily_otp").over(w))
-
-
-#: name → (builder over the shared grain, which dims it needs).  The
-#: dim keys are ``dd`` (dates), ``da`` (airlines) and ``dp`` (airports).
-#: The medallion driver uses these when a shared grain is available; the
-#: direct fact builders in GOLD_SUITE remain the semantic definition
-#: (and the equality oracle for the pinned test).
-GRAIN_SUITE = {
-    "airline_operational_summary": (airline_operational_summary_from_grain, ("da",)),
-    "daily_flight_summary": (daily_flight_summary_from_grain, ("dd", "da")),
-    "monthly_flight_trends": (monthly_flight_trends_from_grain, ("dd", "da")),
-    "airline_day_of_week": (airline_day_of_week_from_grain, ("da",)),
-    "seasonal_flight_summary": (seasonal_flight_summary_from_grain, ("dd",)),
-    "weekend_weekday_split": (weekend_weekday_split_from_grain, ("dd", "da")),
-    "quarterly_flight_summary": (quarterly_flight_summary_from_grain, ("dd", "da")),
-    "rolling_on_time_performance": (rolling_on_time_performance_from_grain, ("dd", "da")),
-}
-
-
-def significant_routes_from_traffic(traffic: DataFrame, floor: int = 100) -> DataFrame:
-    """``significant_routes`` derived from an already-built
-    ``route_traffic`` frame (pure filter — shares the one heavy
-    route aggregation instead of recomputing it)."""
-    return traffic.filter(F.col("total_flights") >= floor)
-
-
-def top_routes_from_traffic(traffic: DataFrame, k: int) -> DataFrame:
-    """``top_routes``/``busiest_routes`` derived from an already-built
-    ``route_traffic`` frame (sort + limit over route-level rows)."""
-    return traffic.orderBy(
-        F.col("total_flights").desc(), "origin_code", "dest_code"
-    ).limit(k)
-
-
-#: name → builder over the shared ``route_traffic`` frame; the
-#: medallion driver uses these when several route tables share one
-#: route aggregation.
-ROUTE_SUITE = {
-    "route_traffic": lambda traffic: traffic,
-    "top_routes": lambda traffic: top_routes_from_traffic(traffic, 10),
-    "significant_routes": significant_routes_from_traffic,
-    "busiest_routes": lambda traffic: top_routes_from_traffic(traffic, 50),
-}
-
-
-#: The full gold suite, name → (direct builder over the fact, which dims
-#: it needs, as in GRAIN_SUITE); mirrors the reference's 15 gold tables
-#: (plus route helpers).  pipelines/medallion.py materializes these, and
-#: this table is the one place each gold table's inputs are declared.
+#: The full gold suite: name → (declaration, dim keys), mirroring the
+#: reference's 15 gold tables (plus route helpers).  The dim keys are
+#: ``dd`` (dim_date), ``da`` (dim_airline) and ``dp`` (dim_airport), passed
+#: after the fact in that order.  A declaration is a ``Rollup``, a
+#: ``RouteTable`` or a plain fact builder, and calling it lowers it over
+#: the fact.  pipelines/medallion.py materializes the suite and dispatches
+#: on the type: rollups read one shared grain, route tables one shared
+#: ``route_traffic`` frame, everything else the fact.
 GOLD_SUITE = {
-    "route_traffic": (route_traffic, ("dp",)),
+    "route_traffic": (RouteTable(lambda traffic: traffic), ("dp",)),
     "top_routes": (top_routes, ("dp",)),
     "airline_operational_summary": (airline_operational_summary, ("da",)),
     "daily_flight_summary": (daily_flight_summary, ("dd", "da")),
     "weekly_flight_summary": (weekly_flight_summary, ("dd", "da")),
     "monthly_flight_trends": (monthly_flight_trends, ("dd", "da")),
     "airline_scorecard": (airline_scorecard, ("da",)),
-    "airline_day_of_week": (airline_day_of_week, ("dd", "da")),
+    "airline_day_of_week": (airline_day_of_week, ("da",)),
     "significant_routes": (significant_routes, ("dp",)),
     "busiest_routes": (busiest_routes, ("dp",)),
     "airport_traffic": (airport_traffic, ("dp",)),

@@ -298,26 +298,18 @@ def _build_gold_suite(
     per_table: dict[str, float] = {}
     names = gold_names or list(gold_flights.GOLD_SUITE)
 
-    # Shared-grain fan-in (round-10 verdict task 6): the eight
-    # (date, airline)-family tables re-aggregate ONE cached partial
-    # (~|dates|x|airlines| rows) instead of each re-scanning the 2M-row
-    # cached fact, and the ROUTE_SUITE tables share ONE route_traffic
-    # aggregation (filter / top-k are route-level).  Lossless by
-    # construction — integer partials; see the derivation section in
-    # pipelines/gold_flights.py and the pinned bitwise-equality test.
+    # Shared fan-in: the Rollup tables re-aggregate ONE cached partial
+    # (~|dates|x|airlines| rows, carrying only the partials they declare)
+    # instead of each re-scanning the cached fact, and the RouteTable
+    # tables share ONE route_traffic aggregation (filter / top-k are
+    # route-level).  See the declarations section in
+    # pipelines/gold_flights.py for why both lowerings agree bitwise.
     dims = {"dd": dd_t, "da": da_t, "dp": dp_t}
-    grain_names = [n for n in names if n in gold_flights.GRAIN_SUITE]
-    route_names = [n for n in names if n in gold_flights.ROUTE_SUITE]
-    grain = (
-        gold_flights.build_date_airline_grain(fact_t).persist()
-        if grain_names
-        else None
-    )
-    traffic = (
-        gold_flights.route_traffic(fact_t, dp_t).persist()
-        if len(route_names) > 1
-        else None
-    )
+    specs = [gold_flights.GOLD_SUITE[n][0] for n in names]
+    rollups = [s for s in specs if isinstance(s, gold_flights.Rollup)]
+    n_routes = sum(isinstance(s, gold_flights.RouteTable) for s in specs)
+    grain = gold_flights.build_grain(fact_t, rollups).persist() if rollups else None
+    traffic = gold_flights.route_traffic(fact_t, dp_t).persist() if n_routes > 1 else None
     # Materialize the shared frames BEFORE the fan-out: under
     # gold_parallelism > 1 the first tables to reference a lazily-cached
     # frame RACE to compute it (Spark caches on first completion, but
@@ -330,13 +322,13 @@ def _build_gold_suite(
         traffic.count()
 
     def _build_df(name: str):
-        if grain is not None and name in gold_flights.GRAIN_SUITE:
-            fn, needed = gold_flights.GRAIN_SUITE[name]
-            return fn(grain, *[dims[d] for d in needed])
-        if traffic is not None and name in gold_flights.ROUTE_SUITE:
-            return gold_flights.ROUTE_SUITE[name](traffic)
-        fn, needed = gold_flights.GOLD_SUITE[name]
-        return fn(fact_t, *[dims[d] for d in needed])
+        spec, needed = gold_flights.GOLD_SUITE[name]
+        args = [dims[d] for d in needed]
+        if isinstance(spec, gold_flights.Rollup):
+            return spec.from_grain(grain, *args)
+        if traffic is not None and isinstance(spec, gold_flights.RouteTable):
+            return spec.step(traffic)
+        return spec(fact_t, *args)
 
     def _write_one(name: str) -> tuple[str, str, float]:
         df = _build_df(name)

@@ -120,9 +120,7 @@ class RunLog:
         if not self.rows:
             return
         df = spark.createDataFrame(self.rows, TASK_LOG_SCHEMA)
-        write_partitioned_path(
-            df.coalesce(1), path, ["environment", "log_date"], mode="append", file_format="parquet"
-        )
+        write_partitioned_path(df.coalesce(1), path, ["environment", "log_date"])
         self.rows.clear()
 
 

@@ -495,11 +495,8 @@ def flight_airline_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's bug would hash-mismatch every row.
     """
     del sf_dir
-    fact, dim_airline, _, dim_date = _silver(spark)
-    return (
-        G.airline_day_of_week(fact, dim_date, dim_airline)
-        .orderBy("airline", "day_of_week")
-    )
+    fact, dim_airline, _, _ = _silver(spark)
+    return G.airline_day_of_week(fact, dim_airline).orderBy("airline", "day_of_week")
 
 
 @register(

@@ -141,19 +141,9 @@ def promote_table(spark: SparkSession, staging_name: str, final_name: str) -> st
     return final_name
 
 
-def write_partitioned_path(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "append",
-    file_format: str | None = None,
-) -> None:
-    """S7 — partitioned path write (log tables, landing zones)."""
-    fmt = file_format or DEFAULT_FORMAT
-    writer = df.write.mode(mode).format(fmt)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(path)
+def write_partitioned_path(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """S7 — partitioned parquet append to a path (log tables, landing zones)."""
+    df.write.mode("append").format("parquet").partitionBy(*partition_cols).save(path)
 
 
 #: Table property stamped by :func:`save_bucketed_table` after the
